@@ -665,6 +665,127 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     assert(!ServeMain.markerCurrent("", fp))
   }
 
+  /** Every `/search`, `/query` and `/search/batch` rejection, pinned to
+    * its status code and full body. Rows run against the bare suite
+    * engine (no ANN or positional index) or an engine holding all of
+    * them; a few rows pin the order in which checks fire. */
+  private lazy val rejectionRows: Seq[(String, Boolean, String, String)] = {
+    val over = (1 to 257).map(i => s""""q$i"""").mkString(",")
+    val noPos = "this engine was built without a positional index; start " +
+      "it with posPostings or posStore to serve"
+    val threshold = "score_threshold 0.4 exceeds the maximum RRF score " +
+      "0.032787; RRF thresholds are in (0, 2/(rrfK+1)]"
+    // (path, full engine?, request body, expected error message)
+    Seq(
+      ("/search", true, """{"query":"x","ann":"faiss"}""",
+        """unknown ann mode 'faiss' (use true, "ivf" or "hnsw")"""),
+      ("/search", true, """{"query":"x","ann":1}""",
+        """'ann' must be a boolean or "ivf"/"hnsw""""),
+      ("/query", true, """{"question":"x","ann":{}}""",
+        """'ann' must be a boolean or "ivf"/"hnsw""""),
+      ("/search", true, """{"query":"x","rerank":"fp4"}""",
+        """unknown rerank mode 'fp4' (use "maxsim" or "int8")"""),
+      ("/search", true, """{"query":"x","rerank":true}""",
+        """'rerank' must be "maxsim" or "int8""""),
+      ("/search", true, """{"query":"x","ann":"faiss","rerank":"fp4"}""",
+        """unknown ann mode 'faiss' (use true, "ivf" or "hnsw")"""),
+      ("/search", true, """{"query":"x","ann":"ivf","diversify":true}""",
+        "ann and diversify cannot combine on one request"),
+      ("/search", true, """{"query":"x","ann":"hnsw","rerank":"maxsim"}""",
+        """"rerank": "maxsim" reranks the plain hybrid prefetch; it """ +
+          "cannot combine with ann or diversify"),
+      ("/search", true, """{"query":"x","rerank":"maxsim","diversify":true}""",
+        """"rerank": "maxsim" reranks the plain hybrid prefetch; it """ +
+          "cannot combine with ann or diversify"),
+      ("/search", true, """{"query":"x","rerank":"int8"}""",
+        """"rerank": "int8" is the quantized IVF serve; it requires "ann": "ivf""""),
+      ("/search", true, """{"query":"x","ann":"hnsw","rerank":"int8"}""",
+        """"rerank": "int8" is the quantized IVF serve; it requires "ann": "ivf""""),
+      ("/search", true, """{"query":"x","ann":"ivf","rerank":"int8","rerank_n":0}""",
+        "rerank_n 0 must be >= 1"),
+      ("/search", false, """{"query":"x","ann":"ivf","rerank":"int8","rerank_n":0}""",
+        "rerank_n 0 must be >= 1"),
+      ("/search", true, """{"query":"x","ann":true,"n_probe":0}""",
+        "n_probe 0 must be >= 1"),
+      ("/search", true, """{"query":"x","ann":"ivf","rerank":"int8","n_probe":-2}""",
+        "n_probe -2 must be >= 1"),
+      ("/search", true, """{"query":"x","ann":"hnsw","ef":0}""",
+        "ef 0 and hops 3 must be >= 1"),
+      ("/query", true, """{"question":"x","ann":"hnsw","hops":0}""",
+        "ef 16 and hops 0 must be >= 1"),
+      ("/search", true, """{"query":"x","diversify":true,"mmr_lambda":1.5}""",
+        "mmr_lambda 1.5 out of range [0, 1]"),
+      ("/search", true, """{"query":"x","mmr_lambda":-0.5,"ann":"faiss"}""",
+        "mmr_lambda -0.5 out of range [0, 1]"),
+      ("/search", true, """{"query":"x","score_threshold":0.4}""", threshold),
+      ("/query", true, """{"question":"x","score_threshold":0.4,"ann":"faiss"}""",
+        threshold),
+      ("/search/batch", true, """{"queries":["x"],"score_threshold":0.4}""",
+        threshold),
+      ("/search", false, """{"query":"x","ann":true}""",
+        "this engine was built without an IVF index; start it with an " +
+          """IvfIndex to serve "ann": "ivf""""),
+      ("/query", false, """{"question":"x","ann":"ivf","n_probe":0}""",
+        "this engine was built without an IVF index; start it with an " +
+          """IvfIndex to serve "ann": "ivf""""),
+      ("/search", false, """{"query":"x","ann":"hnsw","ef":0}""",
+        "this engine was built without an HNSW index; start it with an " +
+          """HnswServing to serve "ann": "hnsw""""),
+      ("/search", false, """{"phrase":"habeas corpus"}""", s"""$noPos "phrase""""),
+      ("/search", false, """{"near":["x","y"]}""", s"""$noPos "near""""),
+      ("/search", false, """{"near":[]}""", s"""$noPos "near""""),
+      ("/search/batch", false, """{"phrases":["x y"]}""", s"""$noPos "phrases""""),
+      ("/search", true, """{"near":[]}""",
+        "'near' must be a non-empty array of terms"),
+      ("/search", true, """{"near":["habeas","review"],"max_span":0}""",
+        "max_span 0 cannot fit 2 ordered terms"),
+      ("/search/batch", true, """{}""", "Missing 'queries' array in request body"),
+      ("/search/batch", true, """{"queries":"not an array"}""",
+        "Missing 'queries' array in request body"),
+      ("/search/batch", true, """{"queries":[]}""", "'queries' must be non-empty"),
+      ("/search/batch", true, s"""{"queries":[$over]}""",
+        "'queries' exceeds the batch cap of 256; chunk the request"),
+      ("/search/batch", true, """{"phrases":[]}""", "'phrases' must be non-empty"),
+      ("/search/batch", false, """{"phrases":[]}""", "'phrases' must be non-empty"),
+      ("/search/batch", true, s"""{"phrases":[$over]}""",
+        "'phrases' exceeds the batch cap of 256; chunk the request"),
+      ("/search/batch", true, """{"queries":["x"],"rerank":"int8"}""",
+        """unknown batch rerank mode 'int8' (the batch endpoint serves "maxsim")"""),
+      ("/search/batch", true, """{"queries":["x"],"rerank":3}""",
+        """unknown batch rerank mode '3' (the batch endpoint serves "maxsim")"""),
+      ("/query", true, """{}""", "Missing 'question' field in request body"),
+      ("/query", true, """{"query":"x"}""", "Missing 'question' field in request body"),
+      ("/query", true, """{"phrase":"habeas corpus"}""",
+        "Missing 'question' field in request body"),
+      ("/search", true, """{"q":"wrong field"}""", "Missing 'query' field in request body"),
+      ("/search", true, "", "Missing 'query' field in request body"))
+  }
+
+  test("every /search, /query and /search/batch rejection: pinned status " +
+      "code and full body, in validation order") {
+    val full = HttpApi.start(engine.copy(
+      ivf = Some(new graft.ops.Similarity.IvfIndex(index, nCentroids = 2,
+        vecCol = "dense_vec", idCol = "id")),
+      hnsw = Some(graft.search.HybridSearch.buildHnswServing(index,
+        build = "broadcast")),
+      posPostings = Some(graft.index.IndexWriter.positionalPostings(index))),
+      port = 0)
+    try {
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      for ((path, onFull, body, msg) <- rejectionRows) {
+        val port = if (onFull) full.port else server.port
+        val r = client.send(HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:$port$path"))
+          .header("Content-Type", "application/json")
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        val expected = s"""{"error":${mapper.writeValueAsString(msg)}}"""
+        assert(r.statusCode() == 400 && r.body() == expected,
+          s"$path $body (full engine: $onFull) -> ${r.statusCode()} ${r.body()}")
+      }
+    } finally full.stop()
+  }
+
   test("stop() releases the port") {
     val s2 = HttpApi.start(engine)
     val p = s2.port
