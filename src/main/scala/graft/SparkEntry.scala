@@ -407,9 +407,9 @@ object SparkEntry {
           ivf.assigned.cache().count()
         }),
         "serve" -> (() =>
-          HybridSearch.searchAnn(index, ivf, stats, n, avgLen,
-            "filter join scan vector", HybridSearch.Config(k = 5),
-            nProbe = 4).count()))
+          HybridSearch.search(index, stats, n, avgLen,
+            "filter join scan vector", HybridSearch.Config(k = 5,
+              dense = HybridSearch.Dense.Ivf(ivf, nProbe = 4))).count()))
     }),
     "q215_hybrid_hnsw" -> ((s, dir) => {
       GraftFunctions.register(s)
@@ -436,9 +436,10 @@ object SparkEntry {
           hs.hnsw.graph.count()
         }),
         "serve" -> (() =>
-          HybridSearch.searchHnsw(index, hs, stats, n, avgLen,
+          HybridSearch.search(index, stats, n, avgLen,
             "filter join scan vector",
-            HybridSearch.Config(k = 5, postings = Option(postings)))
+            HybridSearch.Config(k = 5, postings = Option(postings),
+              dense = HybridSearch.Dense.Hnsw(hs)))
             .count()))
     }),
     "q356_bm25_postings" -> ((s, dir) => {
@@ -511,8 +512,9 @@ object SparkEntry {
           val queries = Seq((0L, "filter join scan vector"),
             (1L, "court appeal motion record"),
             (2L, "stream window aggregate state")).toDF("query_id", "query")
-          HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen,
-            queries, HybridSearch.Config(k = 5, postings = Option(postings)))
+          HybridSearch.searchAll(index, stats, n, avgLen, queries,
+            HybridSearch.Config(k = 5, postings = Option(postings),
+              dense = HybridSearch.Dense.Hnsw(hs)))
             .count()
         }))
     }),
@@ -3859,8 +3861,8 @@ object SparkEntry {
       writeAux(ivf.assigned.select("id", "centroid"), dir, "q203_assign")
       writeAux(ivf.probeCells(qVec, 4).toDF("centroid"), dir, "q203_probes")
       writeAux(Seq(Tuple1(qVec.toSeq)).toDF("qv"), dir, "q203_qvec")
-      HybridSearch.searchAnn(index, ivf, stats, n, avgLen, qText, cfg,
-          nProbe = 4)
+      HybridSearch.search(index, stats, n, avgLen, qText,
+          cfg.copy(dense = HybridSearch.Dense.Ivf(ivf, nProbe = 4)))
         .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
     }),
 
@@ -4049,7 +4051,8 @@ object SparkEntry {
       writeAux(hs.hnsw.levels, dir, "q215_levels")
       writeAux(hs.hnsw.graph.select("layer", "id", "nbr"), dir, "q215_graph")
       writeAux(Seq(Tuple1(qVec.toSeq)).toDF("qv"), dir, "q215_qvec")
-      HybridSearch.searchHnsw(index, hs, stats, n, avgLen, qText, cfg)
+      HybridSearch.search(index, stats, n, avgLen, qText,
+          cfg.copy(dense = HybridSearch.Dense.Hnsw(hs)))
         .select("id", "chunk_id", "rrf_score", "dense_score", "bm25_score")
     }),
 
@@ -6075,7 +6078,8 @@ object SparkEntry {
       writeAux(queryTexts.zipWithIndex.map { case (q, i) =>
         (i.toLong, emb.embedQuery(q).toSeq, graft.text.Bm25.tokenize(q))
       }.toDF("qid", "qv", "terms"), dir, "q342_queries")
-      HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen, queries, cfg)
+      HybridSearch.searchAll(index, stats, n, avgLen, queries,
+          cfg.copy(dense = HybridSearch.Dense.Hnsw(hs)))
         .select("query_id", "id", "chunk_id", "rrf_score",
           "dense_score", "bm25_score")
         .orderBy("query_id", "id")

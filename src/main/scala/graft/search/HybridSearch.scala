@@ -62,7 +62,9 @@ object HybridSearch {
     *   [[bm25TopKBlockMax]] — the block-max refinement over MaxScore
     *   (term bounds derive from the block table, so supplying this
     *   alone enables both tiers). Results identical to every other
-    *   sparse route. */
+    *   sparse route.
+    * @param dense the route that serves the dense prefetch ([[Dense]]);
+    *   the sparse branch and RRF fusion are the same on every route. */
   final case class Config(
       k: Int = 3,
       rrfScoreThreshold: Double = 0.0,
@@ -71,12 +73,53 @@ object HybridSearch {
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
       blockBounds: Option[DataFrame] = None,
-      nBlocks: Int = 64) {
-    require(rrfScoreThreshold <= 2.0 / (rrfK + 1),
+      nBlocks: Int = 64,
+      dense: Dense = Dense.Exact) {
+    /** The largest RRF score a document can reach: rank 1 in both
+      * branches. */
+    def maxRrfScore: Double = 2.0 / (rrfK + 1)
+    require(rrfScoreThreshold <= maxRrfScore,
       s"rrfScoreThreshold=$rrfScoreThreshold exceeds the maximum possible " +
-        s"RRF score 2/(rrfK+1)=${2.0 / (rrfK + 1)}: every result would be " +
+        s"RRF score 2/(rrfK+1)=$maxRrfScore: every result would be " +
         "filtered. The reference's score_threshold (default 0.4) applies to " +
         "store-native scores, not RRF — do not port it verbatim.")
+  }
+
+  /** The route that serves the dense prefetch of [[search]] and
+    * [[searchAll]]. Routes differ only in how the prefetch-n nearest
+    * vectors are found; each hands the fusion exact cosine scores. */
+  sealed trait Dense
+  object Dense {
+    /** Exact cosine scan of every vector ([[denseTopK]]). */
+    case object Exact extends Dense
+
+    /** Probe `nProbe` cells of a prebuilt
+      * [[graft.ops.Similarity.IvfIndex]] and rank exactly within them
+      * — nProbe/nCentroids of the corpus when the index is
+      * [[graft.ops.Similarity.IvfIndex.writePartitioned]]. Results
+      * differ from [[Exact]] only when a true neighbour lies outside
+      * the probed cells, the recall/cost dial the
+      * [[graft.ops.Similarity.RandomHyperplaneIndex.recallAudit]]
+      * family of audits measures. */
+    final case class Ivf(ivf: graft.ops.Similarity.IvfIndex, nProbe: Int = 4)
+        extends Dense
+
+    /** [[Ivf]] served from int8-quantized codes
+      * ([[graft.ops.Similarity.IvfIndex.queryQuantized]]): the probed
+      * cells rank by integer code dot products (4× less scan bandwidth
+      * than floats), then the top `rerankN` survivors get their exact
+      * cosine back. `rerankN` is the recall/bandwidth dial q374
+      * measures; it is floored at the prefetch size so the branch can
+      * always fill its quota. */
+    final case class Int8(ivf: graft.ops.Similarity.IvfIndex,
+        nProbe: Int = 4, rerankN: Int = 50) extends Dense
+
+    /** Walk a prebuilt HNSW graph ([[HnswServing]],
+      * [[graft.ops.Similarity.HnswIndex.search]]): O(ef · hops · deg)
+      * graph rows per query instead of a corpus scan. `ef`/`hops` are
+      * the recall/cost dials. */
+    final case class Hnsw(hs: HnswServing, ef: Int = 16, hops: Int = 3)
+        extends Dense
   }
 
   /** T2 — dense branch: exact cosine top-n (TakeOrderedAndProject). */
@@ -105,22 +148,29 @@ object HybridSearch {
       // null-typed literal: the non-empty branch's sum() is nullable,
       // so the empty frame must be too for schema equality
       .select(col(idCol), lit(null).cast("double").as("bm25_score")).limit(0)
-    val idfCol = log(lit(1.0) + (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
-    index
+    topBm25(index
       .select(col(idCol), size(col(tokensCol)).as("dl"),
         explode(col(tokensCol)).as("term"))
       .filter(col("term").isin(terms: _*))     // prune before the shuffle
       .groupBy(col(idCol), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
+      .agg(count(lit(1)).as("tf")),
+      docStats, corpusSize, avgDocLen, terms, n, idCol)
+  }
+
+  /** The scoring tail every single-query sparse path ends with: (term,
+    * id, tf, dl) rows join the query terms' df stats (broadcast), BM25
+    * term scores sum per doc at 6dp, top-n. */
+  private def topBm25(tfRows: DataFrame, docStats: DataFrame,
+      corpusSize: Long, avgDocLen: Double, terms: Seq[String], n: Int,
+      idCol: String): DataFrame =
+    tfRows
       .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) + lit(Bm25.b) * col("dl") / lit(avgDocLen))))
+      .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
+        col("tf"), col("dl"), col("df")))
       .groupBy(col(idCol))
       .agg(round(sum("term_score"), 6).as("bm25_score"))
       .orderBy(desc("bm25_score"), col(idCol))
       .limit(n)
-  }
 
   /** T3 SERVED FROM THE INVERTED INDEX — [[bm25TopK]] semantics with
     * per-request work proportional to the MATCHED POSTINGS, not the
@@ -140,18 +190,10 @@ object HybridSearch {
     if (terms.isEmpty) return postings
       .select(col("id").as(idCol),
         lit(null).cast("double").as("bm25_score")).limit(0)
-    val idfCol = log(lit(1.0) + (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
-    postings
+    topBm25(postings
       .filter(col("term").isin(terms: _*))     // partition-prunable at scale
-      .select(col("term"), col("id").as(idCol), col("tf"), col("dl"))
-      .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) + lit(Bm25.b) * col("dl") / lit(avgDocLen))))
-      .groupBy(col(idCol))
-      .agg(round(sum("term_score"), 6).as("bm25_score"))
-      .orderBy(desc("bm25_score"), col(idCol))
-      .limit(n)
+      .select(col("term"), col("id").as(idCol), col("tf"), col("dl")),
+      docStats, corpusSize, avgDocLen, terms, n, idCol)
   }
 
   /** The BM25 term-score expression shared by every sparse path —
@@ -274,21 +316,12 @@ object HybridSearch {
     * candidate ids, top-n. */
   private def scoreCandidates(postings: DataFrame, docStats: DataFrame,
       corpusSize: Long, avgDocLen: Double, terms: Seq[String],
-      candidates: DataFrame, n: Int, idCol: String): DataFrame = {
-    val idfCol = log(lit(1.0) + (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
-    postings
+      candidates: DataFrame, n: Int, idCol: String): DataFrame =
+    topBm25(postings
       .filter(col("term").isin(terms: _*))
       .join(candidates, Seq("id"), "left_semi")
-      .select(col("term"), col("id").as(idCol), col("tf"), col("dl"))
-      .join(broadcast(docStats.filter(col("term").isin(terms: _*))), Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) + lit(Bm25.b) * col("dl") / lit(avgDocLen))))
-      .groupBy(col(idCol))
-      .agg(round(sum("term_score"), 6).as("bm25_score"))
-      .orderBy(desc("bm25_score"), col(idCol))
-      .limit(n)
-  }
+      .select(col("term"), col("id").as(idCol), col("tf"), col("dl")),
+      docStats, corpusSize, avgDocLen, terms, n, idCol)
 
   /** BLOCK-MAX pruning (Ding & Suel's BMW, relationally) — the block
     * refinement of [[maxScorePrune]]: even an ESSENTIAL term's
@@ -558,7 +591,10 @@ object HybridSearch {
     *
     * Shape (the 100 TB story): queries embed/tokenize inside the plan
     * and broadcast everywhere they're needed; the dense branch scores
-    * all pairs once and heap-prunes per query ([[denseTopKAll]]); the
+    * all pairs once and heap-prunes per query ([[denseTopKAll]]) or,
+    * on the [[Dense.Hnsw]] route, walks the graph for the whole query
+    * table at once ([[graft.ops.Similarity.HnswIndex.searchBatch]]:
+    * every hop one (query_id, id)-keyed frontier⋈graph join); the
     * sparse branch explodes corpus tokens ONCE, semi-joins them to the
     * union of all query terms (broadcast — bounded by total query
     * vocabulary), computes each (doc, term) BM25 term score once, and
@@ -569,35 +605,37 @@ object HybridSearch {
     * re-sort). Wide shuffles are keyed by query_id (+ id for the
     * fusion join); corpus text and vectors cross no exchange.
     *
+    * Serves the [[Dense.Exact]] and [[Dense.Hnsw]] routes; the IVF
+    * routes have no batched query and are rejected.
+    *
     * Returns one [[search]]-shaped result set per query, keyed by
     * `query_id`, ordered (query_id, rrf_score desc, id). */
   def searchAll(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, queries: DataFrame, cfg: Config = Config(),
       embedder: Embedder = HashingEmbedder.default,
       queryIdCol: String = "query_id", queryCol: String = "query"): DataFrame = {
+    require(cfg.dense == Dense.Exact || cfg.dense.isInstanceOf[Dense.Hnsw],
+      "searchAll serves the Exact and Hnsw dense routes: IvfIndex has no " +
+        "batched query")
     val prefetch = cfg.k * cfg.prefetchMultiplier
     val emb = embedder
     val embedQueryUdf = udf((q: String) => emb.embedQuery(q))
+    val tokenizeUdf = udf((q: String) => graft.text.Bm25.tokenize(q))
     val qs = queries
       .select(col(queryIdCol).as("query_id"), col(queryCol).as("__qtext"))
       .withColumn("__qvec", embedQueryUdf(col("__qtext")))
 
-    // dense prefetch: one scored pass + bounded per-query heaps
-    val dense = denseTopKAll(index, qs, prefetch,
-      queryVecCol = "__qvec")
-    fuseAllWithDense(index, docStats, corpusSize, avgDocLen, qs, dense, cfg)
-  }
-
-  /** The batched sparse branch + per-query fusion shared by
-    * [[searchAll]] (brute dense) and [[searchAllHnsw]] (graph-walk
-    * dense): `qs` is the embedded query table (query_id, __qtext),
-    * `dense` the per-query dense prefetch (query_id, id, dense_score).
-    * Scale shape as documented on [[searchAll]]. */
-  private def fuseAllWithDense(index: DataFrame, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, qs: DataFrame,
-      dense: DataFrame, cfg: Config): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val tokenizeUdf = udf((q: String) => graft.text.Bm25.tokenize(q))
+    // dense prefetch: one scored pass + bounded per-query heaps, or one
+    // batched graph walk
+    val dense = cfg.dense match {
+      case Dense.Hnsw(hs, ef, hops) =>
+        hs.hnsw.searchBatch(qs.select("query_id", "__qvec"),
+            prefetch, ef = ef, hops = hops,
+            queryIdCol = "query_id", queryVecCol = "__qvec")
+          .join(hs.idMap, "hid")
+          .select(col("query_id"), col("id"), col("cos").as("dense_score"))
+      case _ => denseTopKAll(index, qs, prefetch, queryVecCol = "__qvec")
+    }
 
     // sparse prefetch: corpus tokens explode once; (doc, term) scores
     // computed once; fan-out to queries by term
@@ -617,8 +655,6 @@ object HybridSearch {
     // hoisted: the same distinct term set prunes both the corpus-token
     // explode and docStats — one aggregation, not two per plan
     val allTerms = qTerms.select("term").distinct()
-    val idfCol = log(lit(1.0) +
-      (lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
     // (term, id, tf, dl) rows for the union of all query terms: the
     // postings table serves them by term lookup (no corpus token scan);
     // the scan path explodes corpus tokens once
@@ -638,10 +674,8 @@ object HybridSearch {
       .join(broadcast(docStats.join(
         broadcast(allTerms), Seq("term"), "left_semi")),
         Seq("term"))
-      .withColumn("term_score",
-        idfCol * col("tf") * lit(Bm25.k1 + 1.0) /
-          (col("tf") + lit(Bm25.k1) * (lit(1.0 - Bm25.b) +
-            lit(Bm25.b) * col("dl") / lit(avgDocLen))))
+      .withColumn("term_score", termScoreCol(corpusSize, avgDocLen,
+        col("tf"), col("dl"), col("df")))
     val sparsePairs = termScores
       .join(broadcast(qTerms), Seq("term"))
       .groupBy(col("query_id"), col("id"))
@@ -673,70 +707,30 @@ object HybridSearch {
 
   /** Full §3.2 query lifecycle: embed query (V2, with BGE-style prefix)
     * → dense ∪ sparse prefetch (5×k each) → RRF → top-k, joined back to
-    * payload columns. */
+    * payload columns. The dense prefetch runs on the [[Config.dense]]
+    * route; the BM25 branch and RRF fusion are the same on every
+    * route. */
   def search(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, query: String, cfg: Config = Config(),
       embedder: Embedder = HashingEmbedder.default): DataFrame = {
     val prefetch = cfg.k * cfg.prefetchMultiplier
     val qVec = embedder.embedQuery(query)
     val qTerms = Bm25.tokenize(query)
-    val dense = denseTopK(index, qVec, prefetch)
+    val dense = cfg.dense match {
+      case Dense.Exact => denseTopK(index, qVec, prefetch)
+      case Dense.Ivf(ivf, nProbe) => ivf.query(qVec, prefetch, nProbe)
+        .select(col("id"), col("cos").as("dense_score"))
+      case Dense.Int8(ivf, nProbe, rerankN) => ivf.queryQuantized(qVec,
+          prefetch, nProbe, rerank = math.max(rerankN, prefetch))
+        .select(col("id"), col("cos").as("dense_score"))
+      case Dense.Hnsw(hs, ef, hops) =>
+        hs.hnsw.search(qVec, prefetch, ef = ef, hops = hops)
+          .join(hs.idMap, "hid")
+          .select(col("id"), col("cos").as("dense_score"))
+    }
     val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
     val fused = rrfFuse(dense, sparse, cfg)
     // payload projection (P9): hydrate the top-k ids only
-    fused.join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-  }
-
-  /** [[search]] with the dense prefetch served by a prebuilt
-    * [[graft.ops.Similarity.IvfIndex]] over the chunk index's dense
-    * vectors — the 100 TB serving path: the exact dense branch scans
-    * every vector per request; this probes `nProbe` centroid cells and
-    * reranks exactly within them (nProbe/nCentroids of the corpus when
-    * the index is [[graft.ops.Similarity.IvfIndex.writePartitioned]]).
-    * BM25 branch and RRF fusion unchanged, so results differ from
-    * [[search]] only when a true dense neighbor lies outside the probed
-    * cells — the recall/cost dial [[graft.ops.Similarity
-    * .RandomHyperplaneIndex.recallAudit]]'s family of audits measures
-    * before a deployment trusts it. */
-  def searchAnn(index: DataFrame, ivf: graft.ops.Similarity.IvfIndex,
-      docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
-      query: String, cfg: Config = Config(), nProbe: Int = 4,
-      embedder: Embedder = HashingEmbedder.default): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val qVec = embedder.embedQuery(query)
-    val qTerms = Bm25.tokenize(query)
-    val dense = ivf.query(qVec, prefetch, nProbe)
-      .select(col("id"), col("cos").as("dense_score"))
-    val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(dense, sparse, cfg)
-    fused.join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-  }
-
-  /** [[searchAnn]] with the dense branch served from int8-QUANTIZED
-    * codes ([[graft.ops.Similarity.IvfIndex.queryQuantized]]) — the
-    * memory/bandwidth tier of the ANN serving matrix: stage A ranks
-    * the probed cells by pure-integer code dot products (4× less scan
-    * bandwidth than floats), stage B restores exact cosines for the
-    * top `rerankN` survivors only, so everything the fusion sees is an
-    * exact score. `rerankN` is the recall/bandwidth dial q374
-    * measures; it is floored at the prefetch size so the dense branch
-    * can always fill its quota. BM25 branch and RRF fusion
-    * unchanged. */
-  def searchAnnQuantized(index: DataFrame,
-      ivf: graft.ops.Similarity.IvfIndex, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, query: String,
-      cfg: Config = Config(), nProbe: Int = 4, rerankN: Int = 50,
-      embedder: Embedder = HashingEmbedder.default): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val qVec = embedder.embedQuery(query)
-    val qTerms = Bm25.tokenize(query)
-    val dense = ivf.queryQuantized(qVec, prefetch, nProbe,
-        rerank = math.max(rerankN, prefetch))
-      .select(col("id"), col("cos").as("dense_score"))
-    val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(dense, sparse, cfg)
     fused.join(index, Seq("id"), "left")
       .orderBy(desc("rrf_score"), col("id"))
   }
@@ -768,59 +762,6 @@ object HybridSearch {
       // idMap (a projection of the index) is re-derived, never stored
       prebuiltGraph = prebuiltGraph)
     HnswServing(hnsw, mapped.select("hid", "id"))
-  }
-
-  /** [[search]] with the dense prefetch served by a prebuilt HNSW
-    * graph walk ([[graft.ops.Similarity.HnswIndex.search]]) — the
-    * graph member of the ANN serving tier next to [[searchAnn]]'s IVF:
-    * per request the walk touches O(ef · hops · deg) graph rows
-    * instead of scanning the corpus (and instead of IVF's nProbe
-    * cells). `ef`/`hops` are the recall/cost dials; BM25 branch and
-    * RRF fusion unchanged. */
-  def searchHnsw(index: DataFrame, hs: HnswServing, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, query: String,
-      cfg: Config = Config(), ef: Int = 16, hops: Int = 3,
-      embedder: Embedder = HashingEmbedder.default): DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val qVec = embedder.embedQuery(query)
-    val qTerms = Bm25.tokenize(query)
-    val dense = hs.hnsw.search(qVec, prefetch, ef = ef, hops = hops)
-      .join(hs.idMap, "hid")
-      .select(col("id"), col("cos").as("dense_score"))
-    val sparse = sparseTopK(index, docStats, corpusSize, avgDocLen, qTerms, prefetch, cfg)
-    val fused = rrfFuse(dense, sparse, cfg)
-    fused.join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-  }
-
-  /** BATCHED [[searchHnsw]] — the multi-query graph walk
-    * ([[graft.ops.Similarity.HnswIndex.searchBatch]]: every hop one
-    * (query_id, id)-keyed frontier⋈graph join for the whole query
-    * table) feeding [[searchAll]]'s batched BM25 branch and per-query
-    * RRF fusion. This closes the serving matrix: batched brute
-    * ([[searchAll]]), batched IVF (searchAllAnn family), and now
-    * batched HNSW — a thousand queries pay one plan's worth of Spark
-    * jobs instead of a thousand walks. Per-query results equal
-    * [[searchHnsw]] for the same query string (HybridSearchSpec
-    * asserts it); ordered (query_id, rrf_score desc, id). */
-  def searchAllHnsw(index: DataFrame, hs: HnswServing,
-      docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
-      queries: DataFrame, cfg: Config = Config(), ef: Int = 16,
-      hops: Int = 3, embedder: Embedder = HashingEmbedder.default,
-      queryIdCol: String = "query_id", queryCol: String = "query"):
-      DataFrame = {
-    val prefetch = cfg.k * cfg.prefetchMultiplier
-    val emb = embedder
-    val embedQueryUdf = udf((q: String) => emb.embedQuery(q))
-    val qs = queries
-      .select(col(queryIdCol).as("query_id"), col(queryCol).as("__qtext"))
-      .withColumn("__qvec", embedQueryUdf(col("__qtext")))
-    val dense = hs.hnsw.searchBatch(qs.select("query_id", "__qvec"),
-        prefetch, ef = ef, hops = hops,
-        queryIdCol = "query_id", queryVecCol = "__qvec")
-      .join(hs.idMap, "hid")
-      .select(col("query_id"), col("id"), col("cos").as("dense_score"))
-    fuseAllWithDense(index, docStats, corpusSize, avgDocLen, qs, dense, cfg)
   }
 
   /** PHRASE matching from the positional inverted index

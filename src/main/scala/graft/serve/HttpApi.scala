@@ -122,13 +122,13 @@ object HttpApi {
         "summarizer_available" -> h.summarizerAvailable))
     })
     http.createContext("/query", handler("POST") { (body, _) =>
-      searchEndpoint(engine, body, queryField = "question")
+      serve(engine, parseSearch(engine, body, queryField = "question"))
     })
     http.createContext("/search", handler("POST") { (body, _) =>
-      searchEndpoint(engine, body, queryField = "query")
+      serve(engine, parseSearch(engine, body, queryField = "query"))
     })
     http.createContext("/search/batch", handler("POST") { (body, _) =>
-      batchEndpoint(engine, body)
+      serve(engine, parseBatch(engine, body))
     })
     http.createContext("/collection/info", handler("GET") { (_, _) =>
       val info = Serve.collectionInfo(engine.index)
@@ -168,7 +168,62 @@ object HttpApi {
     new Server(http)
   }
 
-  // ---- /query + /search (identical engine call — reference quirk Q6) --
+  // ---- /query + /search + /search/batch --------------------------------
+  // /query and /search are the same engine call (reference quirk Q6);
+  // /search/batch has no reference analog — the q154 batched plan
+  // exposed at the transport layer: N queries, ONE Spark job set.
+
+  /** A request body parsed once and resolved against the engine's
+    * loaded artifacts: the one [[Serve]] call it makes ([[run]]) and
+    * the `search_type` it reports ([[searchType]]). `batch` routes come
+    * from /search/batch and answer one entry per text. */
+  private sealed trait Route { def batch: Boolean }
+  private final case class Hybrid(texts: Seq[String], k: Int,
+      threshold: Double, dense: HybridSearch.Dense, rerank: Serve.Rerank,
+      batch: Boolean) extends Route
+  /** "phrase" on /search, "phrases" on /search/batch: positional-index
+    * phrase matching — a lexical contract ("these tokens,
+    * consecutively"), not a ranked hybrid query, so it short-circuits
+    * the hybrid option surface. */
+  private final case class Phrase(texts: Seq[String], k: Int, batch: Boolean)
+      extends Route
+  /** "near" on /search: terms in order within `maxSpan` tokens over the
+    * positional index. */
+  private final case class Near(terms: Seq[String], maxSpan: Int, k: Int)
+      extends Route { def batch = false }
+
+  private def run(engine: Engine, route: Route): Seq[Serve.QueryResponse] = {
+    import engine._
+    route match {
+      case Hybrid(qs, k, threshold, _, rerank, true) => Serve.queryBatch(index,
+        docStats, corpusSize, avgDocLen, qs, k, threshold, postings,
+        termBounds, blockBounds, rerank)
+      case Hybrid(qs, k, threshold, dense, rerank, false) => Seq(Serve.query(
+        index, docStats, corpusSize, avgDocLen, qs.head, k, threshold,
+        postings, termBounds, blockBounds, dense, rerank))
+      case Phrase(ps, k, true) => Serve.queryPhraseBatch(index, ps, k,
+        posPostings, posStore)
+      case Phrase(ps, k, false) => Seq(Serve.queryPhrase(index, docStats,
+        ps.head, k, posPostings, posStore))
+      case Near(terms, span, k) => Seq(Serve.queryProximity(index, docStats,
+        terms, span, k, posPostings, posStore))
+    }
+  }
+
+  /** The `search_type` a route reports; a hybrid route's is its dense
+    * route, else its rerank pass. */
+  private def searchType(route: Route): String = route match {
+    case _: Phrase => "phrase"
+    case _: Near => "proximity"
+    case h: Hybrid => (h.dense, h.rerank) match {
+      case (_: HybridSearch.Dense.Int8, _) => "hybrid_rrf_ivf_int8"
+      case (_: HybridSearch.Dense.Ivf, _) => "hybrid_rrf_ivf"
+      case (_: HybridSearch.Dense.Hnsw, _) => "hybrid_rrf_hnsw"
+      case (_, _: Serve.Rerank.MaxSim) => "hybrid_rrf_maxsim"
+      case (_, _: Serve.Rerank.Mmr) => "hybrid_rrf_mmr"
+      case _ => "hybrid_rrf"
+    }
+  }
 
   /** The per-hit JSON objects of a [[Serve.QueryResponse]]. */
   private def resultsJson(resp: Serve.QueryResponse): Seq[String] =
@@ -177,269 +232,195 @@ object HttpApi {
       "court" -> r.court, "date_filed" -> r.dateFiled,
       "judges" -> r.judges, "snippet" -> r.snippet))
 
-  private def searchEndpoint(engine: Engine, body: Option[JsonNode],
-      queryField: String): (Int, String) = {
-    // "phrase" mode on /search: positional-index phrase matching — a
-    // lexical contract ("these tokens, consecutively"), not a ranked
-    // hybrid query, so it short-circuits the hybrid option surface
-    field(body, "phrase") match {
-      case Some(p) if queryField == "query" =>
-        val k = intField(body, "limit").getOrElse(engine.defaultK)
-        return (
-          if (engine.posPostings.isEmpty && engine.posStore.isEmpty)
-            (400, err("this engine was built without a positional " +
-              "index; start it with posPostings or posStore to serve " +
-              "\"phrase\""))
-          else {
-            val resp = Serve.queryPhrase(engine.index, engine.docStats,
-              p, k, engine.posPostings, engine.posStore)
-            (200, s"""{"query":${str(p)},"results":[${resultsJson(resp).mkString(",")}],""" +
-              s""""search_type":"phrase","processing_time":${resp.processingTimeSec},""" +
-              s""""documents_found":${resp.results.size}}""")
-          })
-      case _ => ()
+  /** Run a parsed request and render its envelope: the response itself
+    * on /search and /query, one entry per text on /search/batch (whose
+    * responses share one plan and so one processing time). */
+  private def serve(engine: Engine, parsed: Either[String, Route]): (Int, String) =
+    parsed match {
+      case Left(msg) => (400, err(msg))
+      case Right(route) =>
+        val resps = run(engine, route)
+        val sec = resps.headOption.map(_.processingTimeSec).getOrElse(0.0)
+        val typed = s""""search_type":"${searchType(route)}","processing_time":$sec,"""
+        def entry(resp: Serve.QueryResponse, middle: String) =
+          s"""{"query":${str(resp.question)},"results":[${resultsJson(resp).mkString(",")}],""" +
+            s"""$middle"documents_found":${resp.results.size}}"""
+        (200, if (!route.batch) entry(resps.head, typed)
+          else s"""{"responses":[${resps.map(entry(_, "")).mkString(",")}],""" +
+            s"""$typed"queries_count":${resps.size}}""")
     }
-    // "near" mode: ordered proximity over the positional index —
-    // terms in order within "max_span" tokens (default: just-fits)
-    stringArrayField(body, "near") match {
-      case Some(terms) if queryField == "query" =>
-        val k = intField(body, "limit").getOrElse(engine.defaultK)
-        val span = intField(body, "max_span")
-          .getOrElse(math.max(terms.length - 1, 0))
-        return (
-          if (engine.posPostings.isEmpty && engine.posStore.isEmpty)
-            (400, err("this engine was built without a positional " +
-              "index; start it with posPostings or posStore to serve " +
-              "\"near\""))
-          else if (terms.isEmpty)
-            (400, err("'near' must be a non-empty array of terms"))
-          else if (span < terms.length - 1)
-            (400, err(s"max_span $span cannot fit ${terms.length} " +
-              "ordered terms"))
-          else {
-            val resp = Serve.queryProximity(engine.index, engine.docStats,
-              terms, span, k, engine.posPostings, engine.posStore)
-            (200, s"""{"query":${str(resp.question)},""" +
-              s""""results":[${resultsJson(resp).mkString(",")}],""" +
-              s""""search_type":"proximity","processing_time":${resp.processingTimeSec},""" +
-              s""""documents_found":${resp.results.size}}""")
-          })
-      case _ => ()
-    }
-    field(body, queryField) match {
-      case None => (400, err(s"Missing '$queryField' field in request body"))
-      case Some(q) =>
-        val k = intField(body, if (queryField == "question") "max_results" else "limit")
-          .getOrElse(engine.defaultK)
-        val threshold = doubleField(body, "score_threshold").getOrElse(0.0)
-        val ceiling = 2.0 / (HybridSearch.Config().rrfK + 1)
-        if (threshold > ceiling)
-          // deliberate deviation from the reference (which forwards the
-          // store-native default 0.4): against RRF scores that value
-          // silently empties every result set, so reject it loudly
-          (400, err(s"score_threshold $threshold exceeds the maximum RRF " +
-            f"score $ceiling%.6f; RRF thresholds are in (0, 2/(rrfK+1)]"))
-        else {
-          // "diversify": true runs q164's MMR pass over the hybrid
-          // candidates ("mmr_lambda" tunes the relevance/diversity mix)
-          val diversify = boolField(body, "diversify").getOrElse(false)
-          val lambda = doubleField(body, "mmr_lambda").getOrElse(0.7)
-          // "ann": true | "ivf" serves the dense branch from the
-          // engine's prebuilt IVF index (q203's path; "n_probe" is the
-          // dial); "ann": "hnsw" walks the prebuilt HNSW graph (q215's
-          // path; "ef"/"hops" are the dials)
-          val annMode: Either[String, Option[String]] =
-            body.flatMap(b => Option(b.get("ann"))).filter(!_.isNull) match {
-              case None => Right(None)
-              case Some(n) if n.isBoolean =>
-                Right(if (n.asBoolean()) Some("ivf") else None)
-              case Some(n) if n.isTextual && (n.asText() == "ivf" ||
-                  n.asText() == "hnsw") => Right(Some(n.asText()))
-              case Some(n) if n.isTextual =>
-                Left(s"unknown ann mode '${n.asText()}' " +
-                  "(use true, \"ivf\" or \"hnsw\")")
-              case Some(_) =>
-                Left("'ann' must be a boolean or \"ivf\"/\"hnsw\"")
-            }
-          val nProbe = intField(body, "n_probe").getOrElse(4)
-          val ef = intField(body, "ef").getOrElse(16)
-          val hops = intField(body, "hops").getOrElse(3)
-          // "rerank": "maxsim" reranks the hybrid prefetch by ColBERT-
-          // style late interaction (q364's path); "rerank": "int8"
-          // serves the IVF dense branch from quantized codes (q370's
-          // path — requires "ann": "ivf"; "rerank_n" is the q374 dial)
-          val rerankMode: Either[String, Option[String]] =
-            body.flatMap(b => Option(b.get("rerank"))).filter(!_.isNull) match {
-              case None => Right(None)
-              case Some(n) if n.isTextual && (n.asText() == "maxsim" ||
-                  n.asText() == "int8") => Right(Some(n.asText()))
-              case Some(n) if n.isTextual =>
-                Left(s"unknown rerank mode '${n.asText()}' " +
-                  "(use \"maxsim\" or \"int8\")")
-              case Some(_) => Left("'rerank' must be \"maxsim\" or \"int8\"")
-            }
-          val rerankN = intField(body, "rerank_n").getOrElse(50)
-          if (lambda < 0.0 || lambda > 1.0)
-            (400, err(s"mmr_lambda $lambda out of range [0, 1]"))
-          else (annMode, rerankMode) match {
-            case (Left(msg), _) => (400, err(msg))
-            case (_, Left(msg)) => (400, err(msg))
-            case (Right(ann), Right(rerank)) =>
-              if (ann.nonEmpty && diversify)
-                (400, err("ann and diversify cannot combine on one request"))
-              else if (rerank.contains("maxsim") && (ann.nonEmpty || diversify))
-                (400, err("\"rerank\": \"maxsim\" reranks the plain hybrid " +
-                  "prefetch; it cannot combine with ann or diversify"))
-              else if (rerank.contains("int8") && !ann.contains("ivf"))
-                (400, err("\"rerank\": \"int8\" is the quantized IVF serve; " +
-                  "it requires \"ann\": \"ivf\""))
-              else if (rerank.contains("int8") && rerankN < 1)
-                (400, err(s"rerank_n $rerankN must be >= 1"))
-              else if (ann.contains("ivf") && engine.ivf.isEmpty)
-                (400, err("this engine was built without an IVF index; " +
-                  "start it with an IvfIndex to serve \"ann\": \"ivf\""))
-              else if (ann.contains("hnsw") && engine.hnsw.isEmpty)
-                (400, err("this engine was built without an HNSW index; " +
-                  "start it with an HnswServing to serve \"ann\": \"hnsw\""))
-              else if (ann.contains("ivf") && nProbe < 1)
-                (400, err(s"n_probe $nProbe must be >= 1"))
-              else if (ann.contains("hnsw") && (ef < 1 || hops < 1))
-                (400, err(s"ef $ef and hops $hops must be >= 1"))
-              else {
-                val resp = (ann, rerank) match {
-                  case (Some("ivf"), Some("int8")) =>
-                    Serve.queryAnnQuantized(engine.index, engine.ivf.get,
-                      engine.docStats, engine.corpusSize, engine.avgDocLen,
-                      q, k = k, nProbe = nProbe, rerankN = rerankN,
-                      rrfScoreThreshold = threshold,
-                      postings = engine.postings,
-                      termBounds = engine.termBounds,
-                      blockBounds = engine.blockBounds)
-                  case (Some("ivf"), _) => Serve.queryAnn(engine.index,
-                    engine.ivf.get, engine.docStats, engine.corpusSize,
-                    engine.avgDocLen, q, k = k, nProbe = nProbe,
-                    rrfScoreThreshold = threshold,
-                    postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                  case (Some("hnsw"), _) => Serve.queryHnsw(engine.index,
-                    engine.hnsw.get, engine.docStats, engine.corpusSize,
-                    engine.avgDocLen, q, k = k, ef = ef, hops = hops,
-                    rrfScoreThreshold = threshold,
-                    postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                  case (_, Some("maxsim")) =>
-                    Serve.queryReranked(engine.index, engine.docStats,
-                      engine.corpusSize, engine.avgDocLen, q, k = k,
-                      rrfScoreThreshold = threshold,
-                      postings = engine.postings,
-                      termBounds = engine.termBounds,
-                      blockBounds = engine.blockBounds)
-                  case _ =>
-                    if (diversify) Serve.queryDiversified(engine.index,
-                      engine.docStats, engine.corpusSize, engine.avgDocLen,
-                      q, k = k, lambda = lambda,
-                      rrfScoreThreshold = threshold,
-                      postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                    else Serve.query(engine.index, engine.docStats,
-                      engine.corpusSize, engine.avgDocLen, q, k = k,
-                      rrfScoreThreshold = threshold,
-                      postings = engine.postings,
-                    termBounds = engine.termBounds,
-                    blockBounds = engine.blockBounds)
-                }
-                val searchType = (ann, rerank) match {
-                  case (Some("ivf"), Some("int8")) => "hybrid_rrf_ivf_int8"
-                  case (Some("ivf"), _) => "hybrid_rrf_ivf"
-                  case (Some("hnsw"), _) => "hybrid_rrf_hnsw"
-                  case (_, Some("maxsim")) => "hybrid_rrf_maxsim"
-                  case _ =>
-                    if (diversify) "hybrid_rrf_mmr" else "hybrid_rrf"
-                }
-                (200, s"""{"query":${str(q)},"results":[${resultsJson(resp).mkString(",")}],""" +
-                  s""""search_type":"$searchType","processing_time":${resp.processingTimeSec},""" +
-                  s""""documents_found":${resp.results.size}}""")
-              }
-          }
-        }
+
+  /** Parse a /search or /query body; checks fire in a fixed order and
+    * the first failure is the 400 message. */
+  private def parseSearch(engine: Engine, body: Option[JsonNode],
+      queryField: String): Either[String, Route] = {
+    val onSearch = queryField == "query"
+    (if (onSearch) field(body, "phrase") else None,
+        if (onSearch) stringArrayField(body, "near") else None) match {
+      case (Some(p), _) => for {
+        k <- limit(body, "limit", engine)
+        _ <- positional(engine, "phrase")
+      } yield Phrase(Seq(p), k, batch = false)
+      case (_, Some(terms)) =>
+        // default span: just-fits
+        val span = intField(body, "max_span").getOrElse(math.max(terms.length - 1, 0))
+        for {
+          k <- limit(body, "limit", engine)
+          _ <- positional(engine, "near")
+          _ <- check(terms.nonEmpty, "'near' must be a non-empty array of terms")
+          _ <- check(span >= terms.length - 1,
+            s"max_span $span cannot fit ${terms.length} ordered terms")
+        } yield Near(terms, span, k)
+      case _ => for {
+        q <- field(body, queryField)
+          .toRight(s"Missing '$queryField' field in request body")
+        k <- limit(body, if (onSearch) "limit" else "max_results", engine)
+        threshold <- scoreThreshold(body)
+        route <- parseHybrid(engine, body, q, k, threshold)
+      } yield route
     }
   }
 
-  // ---- /search/batch (no reference analog — the q154 batched plan
-  // exposed at the transport layer: N queries, ONE Spark job set) ------
+  /** The hybrid option surface of /search and /query:
+    *  - "diversify": true runs q164's MMR pass over the hybrid
+    *    candidates ("mmr_lambda" tunes the relevance/diversity mix);
+    *  - "ann": true | "ivf" serves the dense branch from the engine's
+    *    prebuilt IVF index (q203's path; "n_probe" is the dial);
+    *    "ann": "hnsw" walks the prebuilt HNSW graph (q215's path;
+    *    "ef"/"hops" are the dials);
+    *  - "rerank": "maxsim" reranks the hybrid prefetch by ColBERT-style
+    *    late interaction (q364's path); "rerank": "int8" serves the IVF
+    *    dense branch from quantized codes (q370's path — requires
+    *    "ann": "ivf"; "rerank_n" is the q374 dial). */
+  private def parseHybrid(engine: Engine, body: Option[JsonNode], q: String,
+      k: Int, threshold: Double): Either[String, Route] = {
+    val diversify = boolField(body, "diversify").getOrElse(false)
+    val lambda = doubleField(body, "mmr_lambda").getOrElse(0.7)
+    val rerankN = intField(body, "rerank_n").getOrElse(50)
+    val annMode: Either[String, Option[String]] = body.flatMap(b => Option(b.get("ann"))).filter(!_.isNull) match {
+      case None => Right(None)
+      case Some(n) if n.isBoolean => Right(if (n.asBoolean()) Some("ivf") else None)
+      case Some(n) if n.isTextual && (n.asText() == "ivf" ||
+          n.asText() == "hnsw") => Right(Some(n.asText()))
+      case Some(n) if n.isTextual =>
+        Left(s"unknown ann mode '${n.asText()}' (use true, \"ivf\" or \"hnsw\")")
+      case Some(_) => Left("'ann' must be a boolean or \"ivf\"/\"hnsw\"")
+    }
+    val rerankMode: Either[String, Option[String]] = body.flatMap(b => Option(b.get("rerank"))).filter(!_.isNull) match {
+      case None => Right(None)
+      case Some(n) if n.isTextual && (n.asText() == "maxsim" ||
+          n.asText() == "int8") => Right(Some(n.asText()))
+      case Some(n) if n.isTextual =>
+        Left(s"unknown rerank mode '${n.asText()}' (use \"maxsim\" or \"int8\")")
+      case Some(_) => Left("'rerank' must be \"maxsim\" or \"int8\"")
+    }
+    for {
+      _ <- check(lambda >= 0.0 && lambda <= 1.0,
+        s"mmr_lambda $lambda out of range [0, 1]")
+      ann <- annMode
+      rerank <- rerankMode
+      maxsim = rerank.contains("maxsim")
+      int8 = rerank.contains("int8")
+      _ <- check(ann.isEmpty || !diversify,
+        "ann and diversify cannot combine on one request")
+      _ <- check(!maxsim || (ann.isEmpty && !diversify),
+        "\"rerank\": \"maxsim\" reranks the plain hybrid prefetch; it " +
+          "cannot combine with ann or diversify")
+      _ <- check(!int8 || ann.contains("ivf"), "\"rerank\": \"int8\" is " +
+        "the quantized IVF serve; it requires \"ann\": \"ivf\"")
+      _ <- check(!int8 || rerankN >= 1, s"rerank_n $rerankN must be >= 1")
+      dense <- ann match {
+        case None => Right[String, HybridSearch.Dense](HybridSearch.Dense.Exact)
+        case Some("ivf") =>
+          val nProbe = intField(body, "n_probe").getOrElse(4)
+          for {
+            ivf <- engine.ivf.toRight("this engine was built without an " +
+              "IVF index; start it with an IvfIndex to serve \"ann\": \"ivf\"")
+            _ <- check(nProbe >= 1, s"n_probe $nProbe must be >= 1")
+          } yield
+            if (int8) HybridSearch.Dense.Int8(ivf, nProbe, rerankN)
+            else HybridSearch.Dense.Ivf(ivf, nProbe)
+        case Some(_) =>
+          val ef = intField(body, "ef").getOrElse(16)
+          val hops = intField(body, "hops").getOrElse(3)
+          for {
+            hs <- engine.hnsw.toRight("this engine was built without an " +
+              "HNSW index; start it with an HnswServing to serve \"ann\": \"hnsw\"")
+            _ <- check(ef >= 1 && hops >= 1, s"ef $ef and hops $hops must be >= 1")
+          } yield HybridSearch.Dense.Hnsw(hs, ef, hops)
+      }
+    } yield Hybrid(Seq(q), k, threshold, dense,
+      if (maxsim) Serve.Rerank.MaxSim()
+      else if (diversify) Serve.Rerank.Mmr(lambda)
+      else Serve.Rerank.NoRerank, batch = false)
+  }
 
   /** Requests above this fan-out get a loud 400 instead of an unbounded
     * broadcast query table; callers chunk. 256 queries × 5k prefetch
     * rows is still a small frame, so the cap is generous. */
   private val maxBatch = 256
 
-  private def batchEndpoint(engine: Engine, body: Option[JsonNode]): (Int, String) = {
-    def render(resps: Seq[Serve.QueryResponse], searchType: String)
-        : (Int, String) = {
-      val entries = resps.map { resp =>
-        s"""{"query":${str(resp.question)},""" +
-          s""""results":[${resultsJson(resp).mkString(",")}],""" +
-          s""""documents_found":${resp.results.size}}"""
-      }
-      val sec = resps.headOption.map(_.processingTimeSec).getOrElse(0.0)
-      (200, s"""{"responses":[${entries.mkString(",")}],""" +
-        s""""search_type":"$searchType","processing_time":$sec,""" +
-        s""""queries_count":${resps.size}}""")
-    }
-    // "phrases" mode: N phrase lookups through ONE positional-index
-    // plan (the q375 batched shape at the transport layer)
+  /** Parse a /search/batch body: "phrases" runs N phrase lookups through
+    * ONE positional-index plan (the q375 batched shape), "queries" N
+    * hybrid queries through one plan — with "rerank": "maxsim", the
+    * whole batch's prefetch AND its MaxSim rescoring each run as ONE
+    * plan (searchAll + maxsimRerankAll). */
+  private def parseBatch(engine: Engine, body: Option[JsonNode]): Either[String, Route] = {
+    def sized(name: String, xs: Seq[String]) = for {
+      _ <- check(xs.nonEmpty, s"'$name' must be non-empty")
+      _ <- check(xs.size <= maxBatch,
+        s"'$name' exceeds the batch cap of $maxBatch; chunk the request")
+    } yield xs
     stringArrayField(body, "phrases") match {
-      case Some(ps) =>
-        val k = intField(body, "limit").getOrElse(engine.defaultK)
-        return (
-          if (ps.isEmpty) (400, err("'phrases' must be non-empty"))
-          else if (ps.size > maxBatch)
-            (400, err(s"'phrases' exceeds the batch cap of $maxBatch; " +
-              "chunk the request"))
-          else if (engine.posPostings.isEmpty && engine.posStore.isEmpty)
-            (400, err("this engine was built without a positional " +
-              "index; start it with posPostings or posStore to serve " +
-              "\"phrases\""))
-          else render(Serve.queryPhraseBatch(engine.index, ps, k,
-            engine.posPostings, engine.posStore), "phrase"))
-      case None => ()
-    }
-    stringArrayField(body, "queries") match {
-      case None => (400, err("Missing 'queries' array in request body"))
-      case Some(qs) if qs.isEmpty => (400, err("'queries' must be non-empty"))
-      case Some(qs) if qs.size > maxBatch =>
-        (400, err(s"'queries' exceeds the batch cap of $maxBatch; chunk the request"))
-      case Some(qs) =>
-        val k = intField(body, "limit").getOrElse(engine.defaultK)
-        val threshold = doubleField(body, "score_threshold").getOrElse(0.0)
-        val ceiling = 2.0 / (HybridSearch.Config().rrfK + 1)
+      case Some(ps) => for {
+        k <- limit(body, "limit", engine)
+        _ <- sized("phrases", ps)
+        _ <- positional(engine, "phrases")
+      } yield Phrase(ps, k, batch = true)
+      case None =>
         val rerank = body.flatMap(b => Option(b.get("rerank")))
           .filter(!_.isNull).map(_.asText())
-        if (threshold > ceiling)
-          (400, err(s"score_threshold $threshold exceeds the maximum RRF " +
-            f"score $ceiling%.6f; RRF thresholds are in (0, 2/(rrfK+1)]"))
-        else if (rerank.exists(_ != "maxsim"))
-          (400, err(s"unknown batch rerank mode '${rerank.get}' " +
-            "(the batch endpoint serves \"maxsim\")"))
-        else if (rerank.contains("maxsim"))
-          // the whole batch's prefetch AND its MaxSim rescoring each
-          // run as ONE plan (searchAll + maxsimRerankAll)
-          render(Serve.queryBatchReranked(engine.index, engine.docStats,
-            engine.corpusSize, engine.avgDocLen, qs, k = k,
-            rrfScoreThreshold = threshold, postings = engine.postings,
-            termBounds = engine.termBounds,
-            blockBounds = engine.blockBounds), "hybrid_rrf_maxsim")
-        else
-          render(Serve.queryBatch(engine.index, engine.docStats,
-            engine.corpusSize, engine.avgDocLen, qs, k = k,
-            rrfScoreThreshold = threshold, postings = engine.postings,
-            termBounds = engine.termBounds,
-            blockBounds = engine.blockBounds), "hybrid_rrf")
+        for {
+          qs <- stringArrayField(body, "queries")
+            .toRight("Missing 'queries' array in request body")
+          _ <- sized("queries", qs)
+          k <- limit(body, "limit", engine)
+          threshold <- scoreThreshold(body)
+          _ <- check(rerank.forall(_ == "maxsim"), s"unknown batch rerank " +
+            s"mode '${rerank.get}' (the batch endpoint serves \"maxsim\")")
+        } yield Hybrid(qs, k, threshold, HybridSearch.Dense.Exact,
+          if (rerank.nonEmpty) Serve.Rerank.MaxSim() else Serve.Rerank.NoRerank,
+          batch = true)
     }
   }
+
+  private def check(ok: Boolean, msg: => String): Either[String, Unit] =
+    if (ok) Right(()) else Left(msg)
+
+  /** The result count: `name` when given, else the engine default. A
+    * count below 1 is a 400 here rather than a Spark error later. */
+  private def limit(body: Option[JsonNode], name: String,
+      engine: Engine): Either[String, Int] = {
+    val k = intField(body, name).getOrElse(engine.defaultK)
+    check(k >= 1, s"$name $k must be >= 1").map(_ => k)
+  }
+
+  /** "score_threshold" applies to the RRF-fused score. A deliberate
+    * deviation from the reference (which forwards the store-native
+    * default 0.4): against RRF scores that value silently empties every
+    * result set, so a value above the RRF ceiling is rejected loudly. */
+  private def scoreThreshold(body: Option[JsonNode]): Either[String, Double] = {
+    val threshold = doubleField(body, "score_threshold").getOrElse(0.0)
+    val ceiling = HybridSearch.Config().maxRrfScore
+    check(threshold <= ceiling, s"score_threshold $threshold exceeds the " +
+      f"maximum RRF score $ceiling%.6f; RRF thresholds are in (0, 2/(rrfK+1)]")
+      .map(_ => threshold)
+  }
+
+  private def positional(engine: Engine, mode: String): Either[String, Unit] =
+    check(engine.posPostings.nonEmpty || engine.posStore.nonEmpty,
+      "this engine was built without a positional index; start it with " +
+        s"""posPostings or posStore to serve "$mode"""")
 
   // ---- SSE (app.py:616-719) -------------------------------------------
 

@@ -3,7 +3,9 @@ package graft.serve
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.embed.{Embedder, HashingEmbedder}
 import graft.search.HybridSearch
+import graft.text.Bm25
 
 /** §2.14 — the serving layer: request/response envelopes mirroring the
   * reference's Flask API (`/root/reference/chatbot/app.py`), with the
@@ -113,141 +115,134 @@ object Serve {
     blocks.collect().map(_.getString(0)).mkString("\n\n")
   }
 
+  /** The ordering pass that runs over the hybrid prefetch before the
+    * top k are returned. Every pass keeps each row's ORIGINAL RRF score
+    * — only order and membership change, so the API's score scale is
+    * the same on every route. `candMultiplier · k` is the prefetch the
+    * pass chooses from. */
+  sealed trait Rerank { def candMultiplier: Int }
+  object Rerank {
+    /** The hybrid top k as fused. */
+    case object NoRerank extends Rerank { val candMultiplier = 1 }
+
+    /** ColBERT-style late interaction
+      * ([[graft.search.LateInteraction.maxsimRerank]]): only the
+      * request-scale prefetch is rescored by per-token MaxSim, so the
+      * token-level embedding work never touches the corpus. */
+    final case class MaxSim(candMultiplier: Int = 3) extends Rerank
+
+    /** MMR diversification (q164's operator at the serving layer): the
+      * shared greedy loop ([[graft.ops.Similarity.mmrSelect]]) picks k
+      * candidates maximizing λ·rel − (1−λ)·max-cosine-to-selected over
+      * their dense vectors. RRF scores are max-normalized into (0, 1]
+      * first so λ blends comparable scales (raw RRF tops out at
+      * 2/(rrfK+1) ≈ 0.03 — unscaled it would be drowned by the cosine
+      * penalty at any λ). */
+    final case class Mmr(lambda: Double = 0.7, candMultiplier: Int = 3)
+        extends Rerank
+  }
+
   /** POST /query | /search — the reference's two identical endpoints
-    * (quirk Q6) collapse to one function. Payload columns present on the
-    * index (`case_name`, `court`, `date_filed`, `judges` — e.g. from the
-    * IngestMain pipeline) hydrate the response; absent ones take the
-    * reference's defaults (`app.py:345-358`). */
+    * (quirk Q6) collapse to one function. `dense` picks the route that
+    * serves the dense prefetch ([[HybridSearch.Dense]]: exact scan,
+    * IVF, int8 IVF or HNSW), `rerank` the ordering pass over the
+    * prefetch; `embedder` embeds the query for both. Payload columns
+    * present on the index (`case_name`, `court`, `date_filed`,
+    * `judges` — e.g. from the IngestMain pipeline) hydrate the
+    * response; absent ones take the reference's defaults
+    * (`app.py:345-358`). */
   def query(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, question: String, k: Int = 3,
       rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
+      blockBounds: Option[DataFrame] = None,
+      dense: HybridSearch.Dense = HybridSearch.Dense.Exact,
+      rerank: Rerank = Rerank.NoRerank,
+      embedder: Embedder = HashingEmbedder.default): QueryResponse = {
     val t0 = System.nanoTime()
     val hits = HybridSearch.search(index, docStats, corpusSize, avgDocLen,
-      question, HybridSearch.Config(k = k,
-        rrfScoreThreshold = rrfScoreThreshold, postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds))
-    collectResponse(hits, question, t0)                                 // F13
+      question, HybridSearch.Config(k = k * rerank.candMultiplier,
+        rrfScoreThreshold = rrfScoreThreshold, postings = postings,
+        termBounds = termBounds, blockBounds = blockBounds, dense = dense),
+      embedder)
+    val results = rerank match {
+      case Rerank.NoRerank => hydrate(hits)
+      case Rerank.MaxSim(_) =>
+        val qTerms = Bm25.tokenize(question).distinct.filter(_.nonEmpty)
+        if (qTerms.isEmpty) hydrate(hits.limit(k))
+        else {
+          val (rows, toResult) = collectHits(hits)
+          if (rows.isEmpty) Nil
+          else {
+            val byId = rows.map(r => r.getAs[String]("id") -> r).toMap
+            graft.search.LateInteraction.maxsimRerank(hits, qTerms, embedder, k)
+              .select("id").collect().toSeq
+              .map(r => toResult(byId(r.getString(0))))
+          }
+        }
+      case Rerank.Mmr(lambda, _) =>
+        val (rows, toResult) = collectHits(hits, extra = Seq("dense_vec"))
+        if (rows.isEmpty) Nil
+        else {
+          val maxRrf = rows.map(_.getAs[Double]("rrf_score")).max
+          val cands = rows.toSeq.map { r =>
+            (r.getAs[String]("id"), r.getAs[Double]("rrf_score") / maxRrf,
+              Option(r.getAs[scala.collection.Seq[Float]]("dense_vec"))
+                .map(_.toArray).getOrElse(Array.empty[Float]))
+          }
+          val byId = rows.map(r => r.getAs[String]("id") -> r).toMap
+          graft.ops.Similarity.mmrSelect(cands, k, lambda)
+            .map { case (id, _, _, _) => toResult(byId(id)) }
+        }
+    }
+    QueryResponse(question, results, secondsSince(t0))                  // F13
   }
 
-  /** Shared top-k → [[QueryResponse]] epilogue (payload hydration,
-    * result mapping, F13 timing) — ONE definition for the plain, IVF,
-    * and HNSW query paths, so the response projection cannot drift
-    * between search modes. */
-  private def collectResponse(hits: DataFrame, question: String,
-      t0: Long): QueryResponse = {
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val results = hits.select(("id" +: "rrf_score" +: "chunk_text" +: payloadCols)
-        .map(col): _*).collect().toSeq.map(toResult(_, present))
-    QueryResponse(question, results, (System.nanoTime() - t0) / 1e9)
-  }
+  // The benchmark in perfbench/ calls the four forwarders below by name,
+  // so they stay; each is [[query]] on one dense route or rerank pass
+  // with its default dials. New callers pass `dense`/`rerank` instead.
 
-  /** [[query]] with the dense branch served by a prebuilt IVF index
-    * ([[graft.search.HybridSearch.searchAnn]]) — the per-request path
-    * that scans nProbe cells instead of the corpus. Same response
-    * shape; `search_type` surfaces the difference to the caller. */
   def queryAnn(index: DataFrame, ivf: graft.ops.Similarity.IvfIndex,
       docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
-      question: String, k: Int = 3, nProbe: Int = 4,
-      rrfScoreThreshold: Double = 0.0,
+      question: String, k: Int = 3, rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.searchAnn(index, ivf, docStats, corpusSize,
-      avgDocLen, question,
-      HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds),
-      nProbe = nProbe)
-    collectResponse(hits, question, t0)
-  }
+      blockBounds: Option[DataFrame] = None): QueryResponse =
+    query(index, docStats, corpusSize, avgDocLen, question, k,
+      rrfScoreThreshold, postings, termBounds, blockBounds,
+      dense = HybridSearch.Dense.Ivf(ivf))
 
-  /** [[query]] with the dense branch served by a prebuilt HNSW graph
-    * walk ([[graft.search.HybridSearch.searchHnsw]]) — the graph member
-    * of the ANN serving tier next to [[queryAnn]]'s IVF. Same response
-    * shape; `search_type` surfaces the difference to the caller. */
   def queryHnsw(index: DataFrame, hs: HybridSearch.HnswServing,
       docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
-      question: String, k: Int = 3, ef: Int = 16, hops: Int = 3,
+      question: String, k: Int = 3, rrfScoreThreshold: Double = 0.0,
+      postings: Option[DataFrame] = None,
+      termBounds: Option[DataFrame] = None,
+      blockBounds: Option[DataFrame] = None): QueryResponse =
+    query(index, docStats, corpusSize, avgDocLen, question, k,
+      rrfScoreThreshold, postings, termBounds, blockBounds,
+      dense = HybridSearch.Dense.Hnsw(hs))
+
+  def queryAnnQuantized(index: DataFrame,
+      ivf: graft.ops.Similarity.IvfIndex, docStats: DataFrame,
+      corpusSize: Long, avgDocLen: Double, question: String, k: Int = 3,
       rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.searchHnsw(index, hs, docStats, corpusSize,
-      avgDocLen, question,
-      HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds),
-      ef = ef, hops = hops)
-    collectResponse(hits, question, t0)
-  }
+      blockBounds: Option[DataFrame] = None): QueryResponse =
+    query(index, docStats, corpusSize, avgDocLen, question, k,
+      rrfScoreThreshold, postings, termBounds, blockBounds,
+      dense = HybridSearch.Dense.Int8(ivf))
 
-  /** [[queryAnn]] with the dense branch served from int8-quantized
-    * codes ([[HybridSearch.searchAnnQuantized]]) — the compression
-    * tier of the serving matrix. `rerankN` is the q374 recall/
-    * bandwidth dial: how many integer-dot survivors get their exact
-    * float cosine back before fusion. */
-  def queryAnnQuantized(index: DataFrame, ivf: graft.ops.Similarity.IvfIndex,
-      docStats: DataFrame, corpusSize: Long, avgDocLen: Double,
-      question: String, k: Int = 3, nProbe: Int = 4, rerankN: Int = 50,
-      rrfScoreThreshold: Double = 0.0,
-      postings: Option[DataFrame] = None,
-      termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.searchAnnQuantized(index, ivf, docStats,
-      corpusSize, avgDocLen, question,
-      HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds),
-      nProbe = nProbe, rerankN = rerankN)
-    collectResponse(hits, question, t0)
-  }
-
-  /** [[query]] with a ColBERT-style MaxSim RERANK epilogue
-    * ([[graft.search.LateInteraction.maxsimRerank]]): the hybrid
-    * search prefetches `candMultiplier · k` candidates (the cheap
-    * first stage), then ONLY that slice rescores by per-token
-    * late interaction and the top k by MaxSim are returned. Like the
-    * MMR path, result rows keep their ORIGINAL RRF score — only the
-    * order and membership change (the rerank is an ordering contract,
-    * not a new score scale for the API). The candidate slice is
-    * request-scale, so the token-level embedding work never touches
-    * the corpus. */
   def queryReranked(index: DataFrame, docStats: DataFrame,
       corpusSize: Long, avgDocLen: Double, question: String, k: Int = 3,
-      candMultiplier: Int = 3, rrfScoreThreshold: Double = 0.0,
+      rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None,
-      embedder: graft.embed.Embedder =
-        graft.embed.HashingEmbedder.default): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.search(index, docStats, corpusSize, avgDocLen,
-      question, HybridSearch.Config(k = k * candMultiplier,
-        rrfScoreThreshold = rrfScoreThreshold, postings = postings,
-        termBounds = termBounds, blockBounds = blockBounds))
-    val qTerms = graft.text.Bm25.tokenize(question)
-      .distinct.filter(_.nonEmpty)
-    if (qTerms.isEmpty) return collectResponse(hits.limit(k), question, t0)
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val rows = hits.select(("id" +: "rrf_score" +: "chunk_text" +:
-        payloadCols).map(col): _*).collect().toSeq
-    if (rows.isEmpty)
-      return QueryResponse(question, Seq.empty, (System.nanoTime() - t0) / 1e9)
-    val order = graft.search.LateInteraction
-      .maxsimRerank(hits, qTerms, embedder, k)
-      .select("id").collect().map(_.getString(0)).toSeq
-    val byId = rows.map(r => r.getAs[String]("id") -> r).toMap
-    val results = order.map(id => toResult(byId(id), present))
-    QueryResponse(question, results, (System.nanoTime() - t0) / 1e9)
-  }
+      blockBounds: Option[DataFrame] = None): QueryResponse =
+    query(index, docStats, corpusSize, avgDocLen, question, k,
+      rrfScoreThreshold, postings, termBounds, blockBounds,
+      rerank = Rerank.MaxSim())
 
   /** PHRASE search served from the positional inverted index
     * ([[HybridSearch.phraseMatches]]) — consecutive-token matching as
@@ -261,23 +256,9 @@ object Serve {
   def queryPhrase(index: DataFrame, docStats: DataFrame, phrase: String,
       k: Int = 3, posPostings: Option[DataFrame] = None,
       store: Option[String] = None): QueryResponse = {
-    require(posPostings.nonEmpty || store.nonEmpty,
-      "queryPhrase needs a positional postings frame or a store path")
-    val t0 = System.nanoTime()
-    val terms = graft.text.Bm25.tokenize(phrase).filter(_.nonEmpty)
-    val spark = index.sparkSession
-    val pp = store match {
-      case Some(path) => graft.index.IndexWriter
-        .readPositionsForTerms(spark, path, terms)
-      case None => posPostings.get
-    }
-    val hits = HybridSearch.phraseMatches(pp, docStats, terms)
-      .groupBy("id").agg(count(lit(1)).cast("double").as("rrf_score"))
-      .orderBy(desc("rrf_score"), col("id"))
-      .limit(k)
-      .join(index, Seq("id"), "left")
-      .orderBy(desc("rrf_score"), col("id"))
-    collectResponse(hits, phrase, t0)
+    val terms = Bm25.tokenize(phrase).filter(_.nonEmpty)
+    queryPositional(index, phrase, terms, k, posPostings, store,
+      "queryPhrase")(HybridSearch.phraseMatches(_, docStats, terms))
   }
 
   /** ORDERED-PROXIMITY search served from the positional index
@@ -288,80 +269,91 @@ object Serve {
   def queryProximity(index: DataFrame, docStats: DataFrame,
       terms: Seq[String], maxSpan: Int, k: Int = 3,
       posPostings: Option[DataFrame] = None,
-      store: Option[String] = None): QueryResponse = {
-    require(posPostings.nonEmpty || store.nonEmpty,
-      "queryProximity needs a positional postings frame or a store path")
+      store: Option[String] = None): QueryResponse =
+    queryPositional(index, terms.mkString(" "), terms, k, posPostings,
+      store, "queryProximity")(
+      HybridSearch.proximityMatches(_, docStats, terms, maxSpan))
+
+  /** The lexical epilogue [[queryPhrase]] and [[queryProximity]] share:
+    * `matches` rows (one per occurrence) count per document, the top k
+    * by count (ties → id) hydrate from the index. */
+  private def queryPositional(index: DataFrame, label: String,
+      terms: Seq[String], k: Int, posPostings: Option[DataFrame],
+      store: Option[String], caller: String)(
+      matches: DataFrame => DataFrame): QueryResponse = {
+    val read = positionReader(index, posPostings, store, caller)
     val t0 = System.nanoTime()
-    val spark = index.sparkSession
-    val pp = store match {
-      case Some(path) => graft.index.IndexWriter
-        .readPositionsForTerms(spark, path, terms)
-      case None => posPostings.get
-    }
-    val hits = HybridSearch.proximityMatches(pp, docStats, terms, maxSpan)
+    val hits = matches(read(terms))
       .groupBy("id").agg(count(lit(1)).cast("double").as("rrf_score"))
       .orderBy(desc("rrf_score"), col("id"))
       .limit(k)
       .join(index, Seq("id"), "left")
       .orderBy(desc("rrf_score"), col("id"))
-    collectResponse(hits, terms.mkString(" "), t0)
+    QueryResponse(label, hydrate(hits), secondsSince(t0))
   }
 
-  /** [[query]] with an MMR diversification pass (no reference analog —
-    * q164's operator at the serving layer): the hybrid search fetches
-    * `candMultiplier · k` candidates, then the shared greedy loop
-    * ([[graft.ops.Similarity.mmrSelect]]) picks k of them maximizing
-    * λ·rel − (1−λ)·max-cosine-to-selected over their dense vectors.
-    * RRF scores are max-normalized into (0, 1] first so λ blends
-    * comparable scales (raw RRF tops out at 2/(rrfK+1) ≈ 0.03 — unscaled
-    * it would be drowned by the cosine penalty at any λ). Result rows
-    * keep their ORIGINAL RRF score; only the order and membership
-    * change. */
-  def queryDiversified(index: DataFrame, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, question: String, k: Int = 3,
-      lambda: Double = 0.7, candMultiplier: Int = 3,
-      rrfScoreThreshold: Double = 0.0,
-      postings: Option[DataFrame] = None,
-      termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): QueryResponse = {
-    val t0 = System.nanoTime()
-    val hits = HybridSearch.search(index, docStats, corpusSize, avgDocLen,
-      question, HybridSearch.Config(k = k * candMultiplier,
-        rrfScoreThreshold = rrfScoreThreshold, postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds))
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val rows = hits.select(("id" +: "rrf_score" +: "chunk_text" +: "dense_vec" +:
-        payloadCols).map(col): _*).collect().toSeq
-    if (rows.isEmpty)
-      return QueryResponse(question, Seq.empty, (System.nanoTime() - t0) / 1e9)
-    val maxRrf = rows.map(_.getAs[Double]("rrf_score")).max
-    val cands = rows.map { r =>
-      (r.getAs[String]("id"), r.getAs[Double]("rrf_score") / maxRrf,
-        Option(r.getAs[scala.collection.Seq[Float]]("dense_vec"))
-          .map(_.toArray).getOrElse(Array.empty[Float]))
+  /** How a lexical request reads positional postings for its terms:
+    * the in-memory frame, or only those terms' buckets of the store. */
+  private def positionReader(index: DataFrame, posPostings: Option[DataFrame],
+      store: Option[String], caller: String): Seq[String] => DataFrame = {
+    require(posPostings.nonEmpty || store.nonEmpty,
+      s"$caller needs a positional postings frame or a store path")
+    store match {
+      case Some(path) => graft.index.IndexWriter
+        .readPositionsForTerms(index.sparkSession, path, _)
+      case None => _ => posPostings.get
     }
-    val byId = rows.map(r => r.getAs[String]("id") -> r).toMap
-    val results = graft.ops.Similarity.mmrSelect(cands, k, lambda)
-      .map { case (id, _, _, _) => toResult(byId(id), present) }
-    QueryResponse(question, results, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Row → API result with payload defaults (reference `app.py:345-358`);
-    * shared by the single and batched query paths so the two endpoints
-    * can never drift in hydration semantics. */
-  private def toResult(r: Row, present: Set[String]): SearchResult = {
-    def opt(c: String, default: String): String =
-      if (present(c)) Option(r.getAs[String](c)).getOrElse(default) else default
-    val text = Option(r.getAs[String]("chunk_text")).getOrElse("")
-    SearchResult(
-      id = r.getAs[String]("id"),
-      score = r.getAs[Double]("rrf_score"),
-      caseName = opt("case_name", "Unknown Case"),
-      court = opt("court", "").toUpperCase(java.util.Locale.ROOT),     // F14
-      dateFiled = opt("date_filed", ""),
-      judges = opt("judges", ""),
-      snippet = if (text.length > 200) text.take(200) + "..." else text)
+  private val payloadCols = Seq("case_name", "court", "date_filed", "judges")
+
+  /** Collect the hit rows a response needs — `lead` columns, then id,
+    * rrf_score, chunk_text, any `extra` columns and the payload columns
+    * present on `hits` — with the row → API result mapping for them
+    * (payload defaults from reference `app.py:345-358`). ONE definition
+    * for every query path, so hydration cannot drift between modes. */
+  private def collectHits(hits: DataFrame, lead: Seq[String] = Nil,
+      extra: Seq[String] = Nil): (Array[Row], Row => SearchResult) = {
+    val present = hits.columns.toSet
+    val rows = hits.select((lead ++ Seq("id", "rrf_score", "chunk_text") ++
+      extra ++ payloadCols.filter(present)).map(col): _*).collect()
+    def toResult(r: Row): SearchResult = {
+      def opt(c: String, default: String): String =
+        if (present(c)) Option(r.getAs[String](c)).getOrElse(default) else default
+      val text = Option(r.getAs[String]("chunk_text")).getOrElse("")
+      SearchResult(
+        id = r.getAs[String]("id"),
+        score = r.getAs[Double]("rrf_score"),
+        caseName = opt("case_name", "Unknown Case"),
+        court = opt("court", "").toUpperCase(java.util.Locale.ROOT),   // F14
+        dateFiled = opt("date_filed", ""),
+        judges = opt("judges", ""),
+        snippet = if (text.length > 200) text.take(200) + "..." else text)
+    }
+    (rows, toResult)
+  }
+
+  /** [[collectHits]] mapped to results in the order `hits` delivers. */
+  private def hydrate(hits: DataFrame): Seq[SearchResult] = {
+    val (rows, toResult) = collectHits(hits)
+    rows.toSeq.map(toResult)
+  }
+
+  private def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  /** Split the collected (query_id, …) rows of a batched plan back into
+    * one response per text; `pick` orders one query's rows. Every
+    * response carries the SHARED wall-clock (one plan ran; attributing
+    * slices per query would be fiction). */
+  private def perQuery(texts: Seq[String], hits: DataFrame, t0: Long)(
+      pick: (Long, Seq[Row]) => Seq[Row]): Seq[QueryResponse] = {
+    val (rows, toResult) = collectHits(hits, lead = Seq("query_id"))
+    val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
+    val sec = secondsSince(t0)                                          // F13
+    texts.zipWithIndex.map { case (q, i) =>
+      val mine = byQuery.getOrElse(i.toLong, Array.empty[Row]).toSeq
+      QueryResponse(q, pick(i.toLong, mine).map(toResult), sec)
+    }
   }
 
   /** POST /search/batch — N questions through ONE Spark plan
@@ -369,16 +361,22 @@ object Serve {
     * sequential [[query]] calls. The corpus is scanned and scored once
     * for the whole batch (queries broadcast; one shuffle keyed by
     * query_id), so serving cost stops scaling with batch size. Result
-    * rows collect in one action — bounded at k × questions — and each
-    * response carries the SHARED wall-clock (one plan ran; attributing
-    * slices per question would be fiction). Per-question hydration is
-    * [[toResult]], identical to the single-query endpoint. */
+    * rows collect in one action — bounded at k × questions. With
+    * [[Rerank.MaxSim]] the whole batch's MaxSim rescoring is one more
+    * plan ([[graft.search.LateInteraction.maxsimRerankAll]] — candidate
+    * tokens fan out to each query's OWN terms only); a query whose text
+    * yields no tokens falls back to its hybrid top-k. Per-question
+    * results equal [[query]]'s (HttpApiSpec asserts the round-trip). */
   def queryBatch(index: DataFrame, docStats: DataFrame, corpusSize: Long,
       avgDocLen: Double, questions: Seq[String], k: Int = 3,
       rrfScoreThreshold: Double = 0.0,
       postings: Option[DataFrame] = None,
       termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None): Seq[QueryResponse] = {
+      blockBounds: Option[DataFrame] = None,
+      rerank: Rerank = Rerank.NoRerank,
+      embedder: Embedder = HashingEmbedder.default): Seq[QueryResponse] = {
+    require(!rerank.isInstanceOf[Rerank.Mmr],
+      "queryBatch serves the NoRerank and MaxSim passes")
     if (questions.isEmpty) return Nil
     val t0 = System.nanoTime()
     val spark = index.sparkSession
@@ -386,21 +384,30 @@ object Serve {
     val qdf = questions.zipWithIndex
       .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
     val hits = HybridSearch.searchAll(index, docStats, corpusSize, avgDocLen,
-      qdf, HybridSearch.Config(k = k, rrfScoreThreshold = rrfScoreThreshold,
-        postings = postings, termBounds = termBounds,
-        blockBounds = blockBounds))
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges").filter(present)
-    val rows = hits.select(("query_id" +: "id" +: "rrf_score" +: "chunk_text" +:
-        payloadCols).map(col): _*).collect()
-    // searchAll orders (query_id, rrf_score desc, id); groupBy on the
-    // collected array preserves that encounter order within each group
-    val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
-    val sec = (System.nanoTime() - t0) / 1e9                           // F13
-    questions.zipWithIndex.map { case (q, i) =>
-      val rs = byQuery.getOrElse(i.toLong, Array.empty[Row])
-        .toSeq.map(toResult(_, present))
-      QueryResponse(q, rs, sec)
+      qdf, HybridSearch.Config(k = k * rerank.candMultiplier,
+        rrfScoreThreshold = rrfScoreThreshold, postings = postings,
+        termBounds = termBounds, blockBounds = blockBounds),
+      embedder = embedder)
+    if (rerank == Rerank.NoRerank)
+      // searchAll orders (query_id, rrf_score desc, id); groupBy on the
+      // collected array preserves that encounter order within each group
+      return perQuery(questions, hits, t0)((_, mine) => mine)
+    val prefetched = hits.localCheckpoint()
+    val qTerms = questions.zipWithIndex
+      .map { case (q, i) =>
+        (i.toLong, Bm25.tokenize(q).distinct.filter(_.nonEmpty)) }
+      .toDF("query_id", "terms")
+    val order = graft.search.LateInteraction.maxsimRerankAll(
+        prefetched, qTerms, embedder, k)
+      .select("query_id", "id")
+      .as[(Long, String)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    perQuery(questions, prefetched, t0) { (i, mine) =>
+      val byId = mine.map(r => r.getAs[String]("id") -> r).toMap
+      order.get(i).filter(_.nonEmpty)
+        // tokenless query (or no scored candidates): hybrid top-k order
+        .getOrElse(mine.map(_.getAs[String]("id")).take(k))
+        .flatMap(byId.get)
     }
   }
 
@@ -414,97 +421,25 @@ object Serve {
   def queryPhraseBatch(index: DataFrame, phrases: Seq[String], k: Int = 3,
       posPostings: Option[DataFrame] = None,
       store: Option[String] = None): Seq[QueryResponse] = {
-    require(posPostings.nonEmpty || store.nonEmpty,
-      "queryPhraseBatch needs a positional postings frame or a store path")
+    val read = positionReader(index, posPostings, store, "queryPhraseBatch")
     if (phrases.isEmpty) return Nil
     val t0 = System.nanoTime()
     val spark = index.sparkSession
     import spark.implicits._
     val slots = phrases.zipWithIndex.flatMap { case (p, qi) =>
-      graft.text.Bm25.tokenize(p).filter(_.nonEmpty).zipWithIndex
+      Bm25.tokenize(p).filter(_.nonEmpty).zipWithIndex
         .map { case (t, s) => (qi.toLong, s, t) }
     }
     if (slots.isEmpty)
-      return phrases.map(p =>
-        QueryResponse(p, Seq.empty, (System.nanoTime() - t0) / 1e9))
+      return phrases.map(p => QueryResponse(p, Seq.empty, secondsSince(t0)))
     val qSlots = slots.toDF("query_id", "slot", "term")
-    val pp = store match {
-      case Some(path) => graft.index.IndexWriter.readPositionsForTerms(
-        spark, path, slots.map(_._3).distinct)
-      case None => posPostings.get
-    }
     val ranked = graft.plans.TopK.perKey(
-      HybridSearch.phraseMatchesAll(pp, qSlots)
+      HybridSearch.phraseMatchesAll(read(slots.map(_._3).distinct), qSlots)
         .groupBy("query_id", "id")
         .agg(count(lit(1)).cast("double").as("rrf_score")),
       Seq("query_id"), Seq(("rrf_score", false), ("id", true)), k)
-    val hits = ranked.join(index, Seq("id"), "left")
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges")
-      .filter(present)
-    val rows = hits.select(("query_id" +: "id" +: "rrf_score" +:
-        "chunk_text" +: payloadCols).map(col): _*).collect()
-    val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
-    val sec = (System.nanoTime() - t0) / 1e9
-    phrases.zipWithIndex.map { case (p, qi) =>
-      val rs = byQuery.getOrElse(qi.toLong, Array.empty[Row]).toSeq
-        .sortBy(r => (-r.getAs[Double]("rrf_score"), r.getAs[String]("id")))
-        .map(toResult(_, present))
-      QueryResponse(p, rs, sec)
-    }
-  }
-
-  /** BATCHED [[queryReranked]] — the whole batch's hybrid prefetch in
-    * one plan ([[HybridSearch.searchAll]]) and the whole batch's
-    * MaxSim rescoring in one plan
-    * ([[graft.search.LateInteraction.maxsimRerankAll]] — candidate
-    * tokens fan out to each query's OWN terms only). Result rows keep
-    * their ORIGINAL RRF scores (the queryReranked/MMR ordering
-    * contract); a query whose text yields no tokens falls back to its
-    * hybrid top-k. */
-  def queryBatchReranked(index: DataFrame, docStats: DataFrame,
-      corpusSize: Long, avgDocLen: Double, questions: Seq[String],
-      k: Int = 3, candMultiplier: Int = 3, rrfScoreThreshold: Double = 0.0,
-      postings: Option[DataFrame] = None,
-      termBounds: Option[DataFrame] = None,
-      blockBounds: Option[DataFrame] = None,
-      embedder: graft.embed.Embedder =
-        graft.embed.HashingEmbedder.default): Seq[QueryResponse] = {
-    if (questions.isEmpty) return Nil
-    val t0 = System.nanoTime()
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qdf = questions.zipWithIndex
-      .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
-    val hits = HybridSearch.searchAll(index, docStats, corpusSize,
-      avgDocLen, qdf, HybridSearch.Config(k = k * candMultiplier,
-        rrfScoreThreshold = rrfScoreThreshold, postings = postings,
-        termBounds = termBounds, blockBounds = blockBounds),
-      embedder = embedder).localCheckpoint()
-    val qTerms = questions.zipWithIndex
-      .map { case (q, i) =>
-        (i.toLong, graft.text.Bm25.tokenize(q).distinct.filter(_.nonEmpty)) }
-      .toDF("query_id", "terms")
-    val order = graft.search.LateInteraction.maxsimRerankAll(
-        hits, qTerms, embedder, k)
-      .select("query_id", "id")
-      .as[(Long, String)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val present = hits.columns.toSet
-    val payloadCols = Seq("case_name", "court", "date_filed", "judges")
-      .filter(present)
-    val rows = hits.select(("query_id" +: "id" +: "rrf_score" +:
-        "chunk_text" +: payloadCols).map(col): _*).collect()
-    val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
-    val sec = (System.nanoTime() - t0) / 1e9
-    questions.zipWithIndex.map { case (q, i) =>
-      val mine = byQuery.getOrElse(i.toLong, Array.empty[Row])
-      val byId = mine.map(r => r.getAs[String]("id") -> r).toMap
-      val ids = order.get(i.toLong).filter(_.nonEmpty)
-        // tokenless query (or no scored candidates): hybrid top-k order
-        .getOrElse(mine.toSeq.map(_.getAs[String]("id")).take(k))
-      QueryResponse(q, ids.flatMap(byId.get).map(toResult(_, present)), sec)
-    }
+    perQuery(phrases, ranked.join(index, Seq("id"), "left"), t0)((_, mine) =>
+      mine.sortBy(r => (-r.getAs[Double]("rrf_score"), r.getAs[String]("id"))))
   }
 
   /** O(1) health from a count cached at engine build (round-6 review:

@@ -48,6 +48,23 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.length == 2)
     assert(rows.head._1 == "d1")
     assert(rows.head._2 >= rows(1)._2)
+    // the IVF dense routes: probing every cell makes the dense branch
+    // the exact scan; fewer probes still fuse and lead with the
+    // relevant doc
+    val ivf = new graft.ops.Similarity.IvfIndex(index, nCentroids = 2,
+      vecCol = "dense_vec", idCol = "id")
+    def routed(dense: HybridSearch.Dense) = HybridSearch.search(index,
+        stats, n, avgLen, "habeas corpus",
+        HybridSearch.Config(k = 2, dense = dense))
+      .select("id", "rrf_score").as[(String, Double)].collect().toSeq
+    assert(routed(HybridSearch.Dense.Ivf(ivf, nProbe = 2)) == rows.toSeq,
+      "probing every cell makes the dense branch the exact scan")
+    assert(routed(HybridSearch.Dense.Int8(ivf, nProbe = 2)) == rows.toSeq,
+      "every cell probed and every code reranked is the exact scan")
+    val pruned = routed(HybridSearch.Dense.Ivf(ivf, nProbe = 1))
+    assert(pruned.nonEmpty && pruned.head._1 == "d1",
+      "the BM25 branch keeps the relevant doc on top even when the " +
+        "dense probe misses cells")
   }
 
   test("postings-backed sparse branch == scan path bit-for-bit " +
@@ -484,73 +501,44 @@ class HybridSearchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("searchAll == per-query search loop, one plan, no per-query jobs") {
-    val cfg = HybridSearch.Config(k = 2)
+    val hs = HybridSearch.buildHnswServing(index, build = "broadcast")
     val queryTexts = Seq("habeas corpus", "grain shipment contract",
       "semiconductor patent", "vehicle search evidence", "payment terms")
     val queries = queryTexts.zipWithIndex
       .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
     val cols = Seq("query_id", "id", "rrf_score", "dense_score", "bm25_score")
-    val batched = HybridSearch.searchAll(index, stats, n, avgLen, queries, cfg)
-    val loop = queryTexts.zipWithIndex.map { case (q, i) =>
-      HybridSearch.search(index, stats, n, avgLen, q, cfg)
-        .select(lit(i.toLong).as("query_id"), col("id"),
-          col("rrf_score"), col("dense_score"), col("bm25_score"))
-    }.reduce(_ unionByName _)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select(cols.map(col): _*).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
           Option(r.get(3)), Option(r.get(4)))).sortBy(t => (t._1, t._2))
-    assert(canon(batched).toSeq == canon(loop).toSeq)
-    // the batched plan is one job shape: bounded per-query heaps
-    // (TopKPerKey), no cartesian product, queries broadcast
-    val plan = batched.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), s"expected bounded heaps:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"query fan-out must broadcast, not cartesian:\n$plan")
-  }
-
-  test("searchAllHnsw == per-query searchHnsw loop: the batched graph " +
-      "walk serves every query identically to the single walk") {
-    val cfg = HybridSearch.Config(k = 2)
-    val hs = HybridSearch.buildHnswServing(index, build = "broadcast")
-    val queryTexts = Seq("habeas corpus", "grain shipment contract",
-      "semiconductor patent")
-    val queries = queryTexts.zipWithIndex
-      .map { case (q, i) => (i.toLong, q) }.toDF("query_id", "query")
-    val cols = Seq("query_id", "id", "rrf_score", "dense_score", "bm25_score")
-    val batched = HybridSearch.searchAllHnsw(index, hs, stats, n, avgLen,
-      queries, cfg)
-    val loop = queryTexts.zipWithIndex.map { case (q, i) =>
-      HybridSearch.searchHnsw(index, hs, stats, n, avgLen, q, cfg)
-        .select(lit(i.toLong).as("query_id"), col("id"),
-          col("rrf_score"), col("dense_score"), col("bm25_score"))
-    }.reduce(_ unionByName _)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(col): _*).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-          Option(r.get(3)), Option(r.get(4)))).sortBy(t => (t._1, t._2))
-    assert(canon(batched).toSeq == canon(loop).toSeq)
-  }
-
-  test("searchAnn with every cell probed equals the exact-dense search; " +
-      "fewer probes still fuse and lead with the relevant doc") {
+    // the exact scan and the HNSW graph walk: the batched plan serves
+    // every query identically to the single-query plan on its route
+    for (dense <- Seq(HybridSearch.Dense.Exact, HybridSearch.Dense.Hnsw(hs))) {
+      val cfg = HybridSearch.Config(k = 2, dense = dense)
+      val batched = HybridSearch.searchAll(index, stats, n, avgLen, queries, cfg)
+      val loop = queryTexts.zipWithIndex.map { case (q, i) =>
+        HybridSearch.search(index, stats, n, avgLen, q, cfg)
+          .select(lit(i.toLong).as("query_id"), col("id"),
+            col("rrf_score"), col("dense_score"), col("bm25_score"))
+      }.reduce(_ unionByName _)
+      assert(canon(batched).toSeq == canon(loop).toSeq, s"route $dense")
+      if (dense == HybridSearch.Dense.Exact) {
+        // the batched plan is one job shape: bounded per-query heaps
+        // (TopKPerKey), no cartesian product, queries broadcast
+        val plan = batched.queryExecution.executedPlan.toString
+        assert(plan.contains("TopKPerKey"), s"expected bounded heaps:\n$plan")
+        assert(!plan.contains("CartesianProduct"),
+          s"query fan-out must broadcast, not cartesian:\n$plan")
+      }
+    }
+    // IvfIndex has no batched query: the batched plan refuses the route
     val ivf = new graft.ops.Similarity.IvfIndex(index, nCentroids = 2,
       vecCol = "dense_vec", idCol = "id")
-    val cfg = HybridSearch.Config(k = 2)
-    val exact = HybridSearch.search(index, stats, n, avgLen,
-        "habeas corpus", cfg)
-      .select("id", "rrf_score").as[(String, Double)].collect().toSeq
-    val allCells = HybridSearch.searchAnn(index, ivf, stats, n, avgLen,
-        "habeas corpus", cfg, nProbe = 2)
-      .select("id", "rrf_score").as[(String, Double)].collect().toSeq
-    assert(allCells == exact,
-      "probing every cell makes the dense branch the exact scan")
-    val pruned = HybridSearch.searchAnn(index, ivf, stats, n, avgLen,
-        "habeas corpus", cfg, nProbe = 1)
-      .select("id").as[String].collect()
-    assert(pruned.nonEmpty && pruned.head == "d1",
-      "the BM25 branch keeps the relevant doc on top even when the " +
-        "dense probe misses cells")
+    val refused = intercept[IllegalArgumentException](HybridSearch.searchAll(
+      index, stats, n, avgLen, queries,
+      HybridSearch.Config(k = 2, dense = HybridSearch.Dense.Ivf(ivf))))
+    assert(refused.getMessage == "requirement failed: searchAll serves " +
+      "the Exact and Hnsw dense routes: IvfIndex has no batched query")
   }
 
   test("rrf score threshold can empty the result (reference early-return path)") {

@@ -758,7 +758,27 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
       ("/query", true, """{"phrase":"habeas corpus"}""",
         "Missing 'question' field in request body"),
       ("/search", true, """{"q":"wrong field"}""", "Missing 'query' field in request body"),
-      ("/search", true, "", "Missing 'query' field in request body"))
+      ("/search", true, "", "Missing 'query' field in request body"),
+      // a result count below 1 is refused on every mode, where it is read
+      ("/search", true, """{"query":"x","limit":0}""", "limit 0 must be >= 1"),
+      ("/search", true, """{"query":"x","limit":0,"score_threshold":0.4}""",
+        "limit 0 must be >= 1"),
+      ("/query", true, """{"question":"x","max_results":-1}""",
+        "max_results -1 must be >= 1"),
+      ("/search", true, """{"phrase":"habeas corpus","limit":0}""",
+        "limit 0 must be >= 1"),
+      ("/search", false, """{"phrase":"habeas corpus","limit":0}""",
+        "limit 0 must be >= 1"),
+      ("/search", true, """{"near":["habeas"],"limit":-1}""",
+        "limit -1 must be >= 1"),
+      ("/search/batch", true, """{"queries":["x"],"limit":0}""",
+        "limit 0 must be >= 1"),
+      ("/search/batch", true, """{"queries":["x"],"limit":-2,"rerank":"maxsim"}""",
+        "limit -2 must be >= 1"),
+      ("/search/batch", true, """{"queries":[],"limit":0}""",
+        "'queries' must be non-empty"),
+      ("/search/batch", true, """{"phrases":["x"],"limit":-3}""",
+        "limit -3 must be >= 1"))
   }
 
   test("every /search, /query and /search/batch rejection: pinned status " +

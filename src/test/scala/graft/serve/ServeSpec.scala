@@ -4,7 +4,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.embed.{Embedder, HashingEmbedder}
 import graft.functions.GraftFunctions
+
+/** [[HashingEmbedder]] document vectors with a query prefix of its own,
+  * so queries embed differently than under the default embedder. */
+final class GrainPrefixEmbedder extends Embedder {
+  private val base = new HashingEmbedder(384)
+  def dim: Int = base.dim
+  def embed(text: String): Array[Float] = base.embed(text)
+  override def queryPrefix: String = "grain shipment delivery contract payment "
+}
 
 class ServeSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -39,6 +49,37 @@ class ServeSpec extends AnyFunSuite with SparkTestBase {
     assert(r.caseName == "Case d1")
     assert(r.court == "SCOTUS") // F14 upper-cased
     assert(r.dateFiled == "2020-01-01" && r.judges == "Stone")
+  }
+
+  test("maxsim threads one embedder through prefetch and rescoring: " +
+      "single and batch requests give the same ids") {
+    // the questions match no corpus token, so the prefetch is the dense
+    // branch alone: the embedder's prefix pulls it to the grain docs,
+    // the default prefix to the docs sharing its words
+    val corpus = Seq(
+      ("a1", "grain shipment delivery under the contract payment"),
+      ("a2", "grain shipment delayed contract payment breach"),
+      ("a3", "payment for grain delivery contract shipment"),
+      ("b1", "represent this query for searching relevant legal passages"),
+      ("b2", "searching relevant legal passages for this query"),
+      ("b3", "relevant legal passages represent this searching query"),
+      ("c1", "patent infringement claim regarding semiconductor lithography"),
+      ("c2", "fourth amendment search and seizure of the vehicle"))
+      .toDF("id", "chunk_text")
+      .withColumn("dense_vec", GraftFunctions.embedText($"chunk_text"))
+      .withColumn("tokens", GraftFunctions.bm25Tokenize($"chunk_text"))
+    val cStats = graft.index.IndexWriter.docFrequencies(corpus)
+    val cAvgLen = corpus.select(avg(size($"tokens"))).head().getDouble(0)
+    val embedder = new GrainPrefixEmbedder
+    val questions = Seq("xylophone zeppelin", "quartz nebula")
+    val batch = Serve.queryBatch(corpus, cStats, 8, cAvgLen, questions, k = 1,
+      rerank = Serve.Rerank.MaxSim(), embedder = embedder)
+    questions.zip(batch).foreach { case (q, b) =>
+      val single = Serve.query(corpus, cStats, 8, cAvgLen, q, k = 1,
+        rerank = Serve.Rerank.MaxSim(), embedder = embedder)
+      assert(single.results.map(_.id) == b.results.map(_.id), q)
+      assert(b.results.nonEmpty && b.results.forall(_.id.startsWith("a")), q)
+    }
   }
 
   test("F15 context block: numbered documents in rank order") {
