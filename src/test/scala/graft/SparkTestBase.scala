@@ -21,3 +21,24 @@ object SparkTestBase {
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.session
 }
+
+/** Spark jobs started while `f` runs, counted by a listener that sees
+  * every job of the session (suites in one fork run one at a time). */
+object JobCount {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  def apply[A](spark: SparkSession)(f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+}

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{JobCount, SparkTestBase}
 
 class DedupSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -55,25 +55,57 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(!comps.contains(4L) && !comps.contains(5L), "unique docs get no label")
   }
 
-  test("connectedComponentsLogN: agrees with min-label on mixed topology") {
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (7L, 7L),
-      (20L, 22L), (22L, 21L), (21L, 20L)) // chain, pair, self-loop, cycle
-      .toDF("id1", "id2")
-    val logN = Dedup.connectedComponentsLogN(edges).as[(Long, Long)].collect().toMap
-    val minLabel = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    assert(logN == minLabel, s"logN=$logN minLabel=$minLabel")
-    assert(logN(4L) == 1L && logN(11L) == 10L && logN(22L) == 20L && logN(7L) == 7L)
+  /** Driver-side union-find over an edge list: id -> min id of its
+    * component. Linking the larger root under the smaller keeps every
+    * root its set's minimum — the independent reference the
+    * components specs compare against. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
   }
 
-  test("connectedComponentsLogN: 1000-link chain converges in O(log n) rounds") {
-    // the pathological topology the algorithm exists for: plain
-    // min-label propagation (no halving) would need ~1000 rounds; the
-    // star rounds collapse it well inside maxIter = 15 ~ O(log2 1000)
-    val chain = (0L until 999L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val comps = Dedup.connectedComponentsLogN(chain, maxIter = 15)
-      .as[(Long, Long)].collect()
-    assert(comps.length == 1000)
-    assert(comps.forall(_._2 == 0L), "single chain collapses to min id 0")
+  test("connectedComponents: agrees with a driver-side union-find on " +
+      "mixed topology and a seeded random graph") {
+    val mixed = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (7L, 7L),
+      (20L, 22L), (22L, 21L), (21L, 20L)) // chain, pair, self-loop, cycle
+    val rnd = new scala.util.Random(5)
+    val random = Seq.fill(240)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+    for (edges <- Seq(mixed, random)) {
+      val got = Dedup.connectedComponents(edges.toDF("id1", "id2"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == unionFind(edges), s"got $got")
+    }
+    val m = Dedup.connectedComponents(mixed.toDF("id1", "id2"))
+      .as[(Long, Long)].collect().toMap
+    assert(m(4L) == 1L && m(11L) == 10L && m(22L) == 20L && m(7L) == 7L)
+  }
+
+  test("connectedComponents: a 1000-link chain and its seeded " +
+      "relabellings converge in O(log n) rounds") {
+    // the pathological topology for label propagation: plain min-label
+    // needs ~1000 rounds, and pointer halving only helps when ids grow
+    // along the path. Randomly permuted ids (seeds 7, 11, 13) must
+    // collapse within maxIter = 12 ~ O(log2 1000) just like the
+    // monotone chain.
+    def path(ids: IndexedSeq[Long]) =
+      ids.indices.init.map(i => (ids(i), ids(i + 1))).toDF("id1", "id2")
+    val ids = (0L until 1000L).toVector
+    val inputs = ("monotone" -> ids) +: Seq(7, 11, 13).map(seed =>
+      s"seed $seed" -> new scala.util.Random(seed).shuffle(ids))
+    for ((name, order) <- inputs) {
+      val comps = Dedup.connectedComponents(path(order), maxIter = 12)
+        .as[(Long, Long)].collect()
+      assert(comps.length == 1000, name)
+      assert(comps.forall(_._2 == 0L), s"$name: one component, min id 0")
+    }
   }
 
   test("jaroWinkler: literature known-answer vectors (Winkler 1990)") {
@@ -393,12 +425,14 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .filter(col("cc_pm") > 0).count() == 0L)
   }
 
+  // 1-2 (5), 2-3 (2), 1-3 (10): best 1→3 is 7 via 2; 9-10 is a
+  // separate component — absent from source 1's table
+  private def pathsGraph = Seq((1L, 2L, 5L), (2L, 3L, 2L), (1L, 3L, 10L),
+    (9L, 10L, 1L)).toDF("src", "dst", "w")
+
   test("shortestPaths: relaxation beats the direct edge, unreachable " +
       "absent, extra rounds idempotent, multi-edge min") {
-    // 1-2 (5), 2-3 (2), 1-3 (10): best 1→3 is 7 via 2; 9-10 is a
-    // separate component — absent from source 1's table
-    val g = Seq((1L, 2L, 5L), (2L, 3L, 2L), (1L, 3L, 10L),
-      (9L, 10L, 1L)).toDF("src", "dst", "w")
+    val g = pathsGraph
     def run(r: Int) = GraphOps.shortestPaths(g, 1L, r)
       .as[(Long, Long)].collect().toMap
     assert(run(4) == Map(1L -> 0L, 2L -> 5L, 3L -> 7L), s"${run(4)}")
@@ -486,12 +520,22 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  // triangle {0,1,2} + pendant chain 2-10-11-12: for k = 2 the chain
+  // peels from the far end, one node per round
+  private def coreGraph = Seq((0L, 1L), (1L, 2L), (2L, 0L),
+    (2L, 10L), (10L, 11L), (11L, 12L)).toDF("src", "dst")
+
+  // two K4 cliques {0..3} and {10..13} plus one bridge 3-10
+  private def bridgedCliques = {
+    def clique(base: Long) = for {
+      i <- base until base + 4; j <- (i + 1) until base + 4
+    } yield (i, j)
+    (clique(0) ++ clique(10) :+ ((3L, 10L))).toDF("src", "dst")
+  }
+
   test("kCore: chain unravels one node per round, ring and triangle " +
       "survive, extra rounds are no-ops") {
-    // triangle {0,1,2} + pendant chain 2-10-11-12: for k = 2 the chain
-    // peels from the far end, one node per round
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L),
-      (2L, 10L), (10L, 11L), (11L, 12L)).toDF("src", "dst")
+    val edges = coreGraph
     def core(iters: Int) = GraphOps.kCore(edges, k = 2, iters = iters)
       .as[(Long, Long)].collect().toMap
     // one round: only the current leaf (12) is gone
@@ -510,11 +554,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("labelPropagation: cliques converge to their min id, a single " +
       "bridge does not merge them, pure function of the edges") {
-    // two K4 cliques {0..3} and {10..13} plus one bridge 3-10
-    def clique(base: Long) = for {
-      i <- base until base + 4; j <- (i + 1) until base + 4
-    } yield (i, j)
-    val edges = (clique(0) ++ clique(10) :+ ((3L, 10L))).toDF("src", "dst")
+    val edges = bridgedCliques
     val got = GraphOps.labelPropagation(edges, iters = 4)
       .as[(Long, Long)].collect().toMap
     assert((0L to 2L).forall(got(_) == 0L), s"clique A -> min id 0: $got")
@@ -524,6 +564,30 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val again = GraphOps.labelPropagation(edges, iters = 4)
       .as[(Long, Long)].collect().toMap
     assert(again == got, "deterministic")
+  }
+
+  test("kCore, shortestPaths, labelPropagation stop at their exact " +
+      "fixed point: a generous round cap returns the converged rows and " +
+      "runs no more jobs than one round past convergence") {
+    // (name, converged round count c, run with a round cap): c is the
+    // first round after which the output no longer changes — the chain
+    // peels 12, 11, 10; 3's distance improves to 7 in round 2; both
+    // cliques settle on their min id in round 2
+    val cases = Seq[(String, Int, Int => Set[(Long, Long)])](
+      ("kCore", 3, n => GraphOps.kCore(coreGraph, k = 2, iters = n)
+        .as[(Long, Long)].collect().toSet),
+      ("shortestPaths", 2, n => GraphOps.shortestPaths(pathsGraph, 1L, n)
+        .as[(Long, Long)].collect().toSet),
+      ("labelPropagation", 2, n => GraphOps.labelPropagation(
+        bridgedCliques, iters = n).as[(Long, Long)].collect().toSet))
+    for ((name, c, run) <- cases) {
+      val (atC, _) = JobCount(spark)(run(c))
+      val (past, pastJobs) = JobCount(spark)(run(c + 1))
+      val (capped, cappedJobs) = JobCount(spark)(run(50))
+      assert(capped == atC && past == atC, s"$name: $capped vs $atC")
+      assert(cappedJobs <= pastJobs,
+        s"$name: iters = 50 ran $cappedJobs jobs, iters = ${c + 1} $pastJobs")
+    }
   }
 
   test("modularityLocalMove: barbell graph, hand-walked synchronous " +

@@ -31,6 +31,18 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
       plain.groupBy("grp").count().as[(String, Long)].collect().toMap)
   }
 
+  test("sizedParallelism: an empty frame takes one partition, an " +
+      "unsized plan the default parallelism") {
+    val cap = spark.sparkContext.defaultParallelism
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(empty.queryExecution.optimizedPlan.stats.sizeInBytes == 0)
+    assert(Skew.sizedParallelism(empty) == 1)
+    assert(Skew.sizedParallelism(li.filter(lit(false))) == 1)
+    // the "unknown = huge" sentinel still lands on the cap
+    assert(Skew.sizedParallelism(spark.range(0L, Long.MaxValue).toDF()) == cap)
+    assert(Skew.sizedParallelism(Seq((1L, 2L)).toDF("a", "b")) == 1)
+  }
+
   test("joinFanoutAudit: contributions, total, shares, one-sided keys") {
     // key 1: 3×2=6, key 2: 1×4=4, key 3 left-only: 0, key 4 right-only: 0
     val left = Seq(1L, 1L, 1L, 2L, 3L).toDF("k")
