@@ -1391,8 +1391,8 @@ object SparkEntry {
         strataCol = "lang", idCol = "doc_id",
         rates = Map("en" -> 0.1, "de" -> 0.5), defaultRate = 0.9)),
 
-    // Near-dup pairs → dedup GROUPS: connected components by min-label
-    // propagation over a planted chain graph (3 copies of every doc;
+    // Near-dup pairs → dedup GROUPS: connected components (min-id
+    // labels) over a planted chain graph (3 copies of every doc;
     // edges link rank-adjacent copies per digest, so labels must travel
     // 2 hops). Oracle: DuckDB recursive-CTE reachability closure.
     "q56_dedup_components" -> ((s, dir) => {
@@ -2765,7 +2765,7 @@ object SparkEntry {
       val edges = d.withColumn("prev", lag("doc_id", 1).over(w))
         .filter(col("prev").isNotNull)
         .select(col("prev").as("id1"), col("doc_id").as("id2"))
-      val labels = Dedup.connectedComponentsLogN(edges)
+      val labels = Dedup.connectedComponents(edges)
       d.select(col("doc_id").as("id"))
         .join(labels, Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
@@ -5601,7 +5601,7 @@ object SparkEntry {
     // Grid-DBSCAN over four planted md5-jittered blobs (+ a sparse
     // shifted stray strip) derived from part keys: density clustering
     // with explicit noise, the arbitrary-shape complement of k-means.
-    // Every role and min-label cluster id is re-derived by DuckDB from
+    // Every role and min-id cluster label is re-derived by DuckDB from
     // the identical point construction.
     "q319_grid_dbscan" -> ((s, dir) => {
       def j(tag: String) =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,19 +7,12 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing args: run only these queries (debug/bisect aid)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Register session UDFs up front: queries that use vec_cosine via
-    // call_function (q25/q36) otherwise depend on a register()-calling
-    // query happening to precede them in map order — when none does,
-    // they throw and silently VANISH from the correctness report.
-    graft.functions.GraftFunctions.register(spark)
+    // the shared session registers the UDFs up front: queries that use
+    // vec_cosine via call_function (q25/q36) otherwise depend on a
+    // register()-calling query happening to precede them in map order —
+    // when none does, they throw and silently VANISH from the
+    // correctness report
+    val spark = GraftSession.build()
     SparkEntry.auxEnabled = true // oracle aux dumps are Verify-only (never benched)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -363,75 +363,9 @@ object Dedup {
     * every document in a component gets the component's min id as its
     * label, so "keep one per group" is a filter on `id == comp`.
     *
-    * Min-label propagation: each round, every node takes the min of its
-    * own label and its neighbors' labels; converges in O(graph diameter)
-    * rounds. Each round is ONE shuffle join on the (symmetrized) edge
-    * list plus a label comparison — edges and labels are narrow (two
-    * longs), so at 100 TB the shuffles carry ids, never documents. Near-
-    * dup graphs are overwhelmingly tiny cliques/chains (diameter ≤ 3 for
-    * content dups), so the round count stays small; a pathological long-
-    * chain graph would want the O(log n) large-star/small-star variant,
-    * which this API could switch to without changing its contract.
-    * Labels are persisted per round and the loop stops on a converged
-    * round (zero label changes) or `maxIter`.
-    *
-    * @param edges (id1, id2) pair table (undirected; duplicates fine)
-    * @return (id, comp) — comp = min id reachable from `id`
-    */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // Lineage MUST be truncated every round. `persist` alone is not
-    // enough: the logical plan still nests the previous round's plan
-    // twice (once directly, once under neighborMin), so the tree doubles
-    // per round — and Spark stringifies the whole analyzed plan on every
-    // action for the SQL-execution event, turning round ~6 into minutes
-    // of driver-side string building (observed: 2609 s at sf0.1 before
-    // this fix). `localCheckpoint` materializes the round AND cuts the
-    // plan, so every round analyzes a constant-size tree. On a real
-    // cluster prefer reliable `checkpoint` (executor loss discards
-    // localCheckpoint blocks); same contract either way.
-    val sym = edges.select(col("id1").as("src"), col("id2").as("dst"))
-      .unionByName(edges.select(col("id2").as("src"), col("id1").as("dst")))
-      .localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")).localCheckpoint()
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val neighborMin = sym
-        .join(labels.select(col("id").as("dst"), col("comp").as("dst_comp")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("dst_comp")).as("nmin"))
-      val stepped = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("comp").as("prev"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-      // Pointer-halving against the previous round's (checkpointed)
-      // table: comp ← labels(comp). A label is always the id of a
-      // reachable node, so its own label is also reachable — this jumps
-      // two hops per round and collapses an L-long chain in O(log L)
-      // rounds instead of O(L), without the double-self-reference a
-      // same-round jump would need.
-      val next = stepped
-        .join(labels.select(col("comp").as("comp2"), col("id").as("comp")),
-          Seq("comp"), "left")
-        .select(col("id"), col("prev"),
-          least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"))
-        .localCheckpoint()
-      converged = next.filter(col("prev") =!= col("comp")).count() == 0L
-      labels = next.select("id", "comp")
-      it += 1
-    }
-    if (!converged)
-      sys.error(s"connectedComponents: not converged after $maxIter rounds " +
-        "(pathological graph diameter?) — refusing to return partial labels")
-    labels
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * rounds — the O(log n)-round algorithm (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) the
-    * [[connectedComponents]] Scaladoc names for pathological long-chain
-    * graphs. Same contract: (id, comp) with comp = min id reachable.
+    * Alternating large-star / small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14) over the
+    * canonical (u < v) edge list:
     *
     *  - large-star: every node u computes m = min(N(u) ∪ {u}) and
     *    re-points each LARGER neighbor v > u at m — long tails collapse
@@ -440,42 +374,60 @@ object Dedup {
     *    node u re-points its smaller neighbors (and itself) at
     *    m = min(N(u) ∪ {u}) — stars around local minima form.
     *
-    * Each round is two grouped shuffles over an ids-only edge list
-    * (same 100 TB posture as min-label: two longs wide, documents never
-    * move). Convergence = the canonical edge set reaches a fixpoint
-    * (checked exactly: equal counts + empty `except`); at the fixpoint
-    * the edges ARE the component stars, so labels read off directly.
-    * The round count is O(log n) on ANY topology — a 1000-link chain
-    * converges in ~10 rounds where plain min-label propagation (no
-    * pointer-halving) would need ~1000. */
-  def connectedComponentsLogN(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    val allNodes = edges.select(col("id1").as("id"))
-      .unionByName(edges.select(col("id2").as("id")))
-      .distinct().localCheckpoint()
-    var e = edges
-      .select(least(col("id1"), col("id2")).as("u"),
-        greatest(col("id1"), col("id2")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct().localCheckpoint()
+    * The round count is O(log n) on any topology and any id order: a
+    * 1000-link path converges in ~10 rounds whether its ids grow along
+    * it or are randomly permuted (min-label propagation needs O(path
+    * length) rounds on the latter, pointer halving or not). Each star
+    * is two grouped shuffles over an ids-only edge list (two longs
+    * wide — at 100 TB the shuffles carry ids, never documents), and
+    * the rounds run through [[Iterate.fixedPoint]].
+    *
+    * Convergence is exact and costs no job: the fixpoint is a forest of
+    * stars rooted at their minimum, i.e. no node has two smaller
+    * neighbors, or a smaller and a larger one. Large-star already
+    * groups every node's neighborhood, so it counts both and emits
+    * self-pairs (a, a) for each node that breaks the rule; small-star
+    * ignores self-pairs, and the loop stops once a large-star output
+    * (observed during its cut) holds none. Its input was then a star
+    * forest, which large-star returns unchanged, so labels read off
+    * directly.
+    *
+    * @param edges (id1, id2) pair table (undirected; duplicates and
+    *              self-loops fine)
+    * @return (id, comp) — comp = min id reachable from `id`
+    */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    // one cut reads `edges`: self-loops stay for the node set only
+    val pairs = Iterate.cut(edges.select(least(col("id1"), col("id2")).as("u"),
+      greatest(col("id1"), col("id2")).as("v")))
+    val allNodes = pairs.select(col("u").as("id"))
+      .unionByName(pairs.select(col("v").as("id"))).distinct()
 
     def largeStar(cur: DataFrame): DataFrame = {
       val sym = cur.select(col("u").as("a"), col("v").as("b"))
         .unionByName(cur.select(col("v").as("a"), col("u").as("b")))
-      val mins = sym.groupBy("a").agg(min("b").as("mn"))
-        .select(col("a"), least(col("a"), col("mn")).as("m"))
-      sym.join(mins, "a")
-        .filter(col("b") > col("a"))
-        .select(least(col("b"), col("m")).as("u"),
-          greatest(col("b"), col("m")).as("v"))
-        .filter(col("u") =!= col("v"))
-      // no distinct here: small-star's terminal distinct subsumes it,
+      val nbrs = sym.groupBy("a").agg(min("b").as("mn"),
+          count(when(col("b") < col("a"), 1)).as("n_smaller"),
+          count(when(col("b") > col("a"), 1)).as("n_larger"))
+        .select(col("a"), least(col("a"), col("mn")).as("m"),
+          (col("n_smaller") > 1 || (col("n_smaller") === 1 &&
+            col("n_larger") > 0)).as("breaks"))
+      // larger neighbors re-point at m; a node that breaks the star
+      // rule turns each of its smaller-neighbor rows into a self-pair.
+      // No distinct here: small-star's terminal distinct subsumes it,
       // saving one shuffle per round; duplicate multiplicity between
       // the stages is bounded by the (tiny) per-node dup factor
+      sym.join(nbrs, "a")
+        .filter(col("b") > col("a") || col("breaks"))
+        .select(
+          when(col("b") > col("a"), col("m")).otherwise(col("a")).as("u"),
+          when(col("b") > col("a"), col("b")).otherwise(col("a")).as("v"))
     }
 
     def smallStar(cur: DataFrame): DataFrame = {
-      // orient (a = larger endpoint, b = smaller); every b < a
+      // orient (a = larger endpoint, b = smaller); every b <= a — a
+      // self-pair only proposes its own node as a group's minimum,
+      // which every smaller neighbor beats and which is dropped alone
       val dir = cur.select(col("v").as("a"), col("u").as("b"))
       val mins = dir.groupBy("a").agg(min("b").as("m"))
       dir.join(mins, "a")
@@ -487,45 +439,23 @@ object Dedup {
         .distinct()
     }
 
-    // Convergence probe: (count, bit_xor of xxhash64(u, v)) in ONE
-    // aggregate job per round — the cheap signature decides when to run
-    // the exact set-equality confirmation (equal counts + empty except),
-    // so the two-stage except executes once at the fixpoint instead of
-    // every round (the except-every-round form cost 10x on the bench).
-    // bit_xor is order-independent and cannot overflow under ANSI mode
-    // (a sum of full-range hashes can). A signature collision cannot
-    // produce a wrong result: it only triggers the exact check early,
-    // which then refutes it.
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var eSig = sig(e)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      // ONE alternation per materialization: each star references its
-      // input several times (sym union + mins join), so composing two
-      // rounds without a checkpoint between them multiplies recompute
-      // (measured 17 s vs 9 s at sf0.1) — the checkpoint is what makes
-      // the multi-reference plan linear.
-      val ls = largeStar(e).localCheckpoint()
-      val next = smallStar(ls).localCheckpoint()
-      val nSig = sig(next)
-      converged = nSig == eSig && next.except(e).isEmpty
-      e = next
-      eSig = nSig
-      it += 1
-    }
+    // one alternation per round, with a cut between the stars: each
+    // star references its input several times (sym union + mins join),
+    // so composing them uncut multiplies recompute (measured 17 s vs
+    // 9 s at sf0.1). Duplicated input pairs only inflate the first
+    // neighbor counts, which can delay the stop but never cause it.
+    val (stars, converged) = Iterate.fixedPoint(
+        largeStar(pairs.filter(col("u") =!= col("v"))), maxIter,
+        count(when(col("u") === col("v"), 1)))(
+      ls => largeStar(Iterate.cut(smallStar(ls))),
+      (_, next) => next.signal == Seq(0L))
     if (!converged)
-      sys.error(s"connectedComponentsLogN: not converged after $maxIter " +
+      sys.error(s"connectedComponents: not converged after $maxIter " +
         "rounds — refusing to return partial labels")
-    // fixpoint edges are stars (non-root -> root, canonical order
-    // root < non-root): labels read off; roots and isolated nodes map
-    // to themselves
+    // the stars point non-root -> root, canonical order root < non-root:
+    // labels read off; roots and isolated nodes map to themselves
     allNodes
-      .join(e.select(col("v").as("id"), col("u").as("comp")), Seq("id"), "left")
+      .join(stars.select(col("v").as("id"), col("u").as("comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
@@ -1267,27 +1197,24 @@ object Dedup {
       textCol: String = "text", maxDf: Long = 20L,
       k: Int = 20): DataFrame = {
     require(maxDf >= 2L && k >= 1, s"bad maxDf/k: $maxDf/$k")
-    val toks = docs.select(col(idCol).as("id"),
+    val toks = Iterate.cut(docs.select(col(idCol).as("id"),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
-      .groupBy("id", "tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .groupBy("id", "tok").agg(count(lit(1)).as("tf")))
     val dft = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     val nRow = docs.agg(count(lit(1)).as("n"))
-    val w = toks.join(dft, "tok").crossJoin(broadcast(nRow))
+    val w = Iterate.cut(toks.join(dft, "tok").crossJoin(broadcast(nRow))
       .withColumn("w", col("tf") * round(log(
         col("n").cast("double") / col("df")) * 1000000, 0).cast("long"))
-      .select("id", "tok", "w")
-      .localCheckpoint()
+      .select("id", "tok", "w"))
     val nrm = w.groupBy("id")
       .agg(sqrt(sum(col("w") * col("w")).cast("double")).as("nrm"))
     val rare = dft.filter(col("df") >= 2 && col("df") <= maxDf)
       .select("tok")
     val postings = toks.join(rare, "tok").select("tok", "id")
-    val cand = postings.alias("a").join(postings.alias("b"),
+    val cand = Iterate.cut(postings.alias("a").join(postings.alias("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
-      .localCheckpoint()
+      .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct())
     val dots = cand
       .join(w.select(col("id").as("id1"), col("tok"),
         col("w").as("w1")), Seq("id1"))
@@ -1321,11 +1248,10 @@ object Dedup {
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String,
       keyCol: String, window: Int): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
-    val ranked = graft.ops.Layout.globalRowNumber(
+    val ranked = Iterate.cut(graft.ops.Layout.globalRowNumber(
         df.select(col(idCol).as("id"), col(keyCol).as("k")),
         Seq("k", "id"), 0)
-      .select(col("id"), col("k"), col("rn"))
-      .localCheckpoint()
+      .select(col("id"), col("k"), col("rn")))
     val shifted = (1 until window).map { d =>
       ranked.select(col("id").as("id2"), col("k").as("k2"),
         (col("rn") - d).as("rn"))

@@ -28,9 +28,8 @@ object GraphOps {
     *
     * Scale shape: the edge table shuffles ONCE per iteration, keyed by
     * src then by dst — never any payload, just (id, rank) longs; the
-    * plan is truncated per round with `localCheckpoint` exactly as in
-    * [[Dedup.connectedComponents]] (same plan-doubling failure mode).
-    * On a real cluster prefer reliable `checkpoint`.
+    * rounds run through [[Iterate.rounds]], which cuts the plan per
+    * round (the [[Iterate]] discipline).
     *
     * Overflow bound: a node's rank is at most the total injected mass
     * ≈ nodes·scale, and the recurrence multiplies by `dNum` before
@@ -40,26 +39,21 @@ object GraphOps {
       scale: Long = 1000000000L, dNum: Long = 85L, dDen: Long = 100L): DataFrame = {
     require(iters >= 1 && dNum > 0 && dDen > dNum,
       s"need iters >= 1 and 0 < dNum < dDen, got iters=$iters d=$dNum/$dDen")
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
+    val e = Iterate.cut(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val base = scale * (dDen - dNum) / dDen
-    var ranks = nodes.withColumn("rank", lit(scale)).localCheckpoint()
-    var i = 0
-    while (i < iters) {
+    Iterate.rounds(nodes.withColumn("rank", lit(scale)), iters) { ranks =>
       val contrib = e
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .join(outdeg, "src")
         .select(col("dst").as("id"),
           expr(s"(rank * $dNum) div ($dDen * outdeg)").as("c"))
         .groupBy("id").agg(sum("c").as("s"))
-      ranks = nodes.join(contrib, Seq("id"), "left")
+      nodes.join(contrib, Seq("id"), "left")
         .select(col("id"), (lit(base) + coalesce(col("s"), lit(0L))).as("rank"))
-        .localCheckpoint()
-      i += 1
     }
-    ranks
   }
 
   /** Personalized PageRank (Haveliwala, WWW '02) — the topic-sensitive
@@ -80,8 +74,8 @@ object GraphOps {
     * list by contract (a topic/trust whitelist, not a data-sized set) —
     * membership compiles to a codegen'd `isin` literal, never a join.
     * Scale shape and overflow bound are [[pageRankFixedPoint]]'s:
-    * (id, rank) longs keyed by an endpoint per round, `localCheckpoint`
-    * per round, nodes·scale·dNum < 2⁶³. */
+    * (id, rank) longs keyed by an endpoint per round, one [[Iterate]]
+    * cut per round, nodes·scale·dNum < 2⁶³. */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
       iters: Int = 10, scale: Long = 1000000000L,
       dNum: Long = 85L, dDen: Long = 100L): DataFrame = {
@@ -89,31 +83,25 @@ object GraphOps {
       s"need iters >= 1 and 0 < dNum < dDen, got iters=$iters d=$dNum/$dDen")
     require(seeds.nonEmpty && seeds.size <= 10000,
       s"seed set must be a bounded non-empty whitelist, got ${seeds.size}")
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
+    val e = Iterate.cut(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val base = scale * (dDen - dNum) / dDen
     val isSeed = col("id").isin(seeds: _*)
-    var ranks = nodes
-      .withColumn("rank", when(isSeed, lit(scale)).otherwise(lit(0L)))
-      .localCheckpoint()
-    var i = 0
-    while (i < iters) {
+    Iterate.rounds(nodes.withColumn("rank",
+        when(isSeed, lit(scale)).otherwise(lit(0L))), iters) { ranks =>
       val contrib = e
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .join(outdeg, "src")
         .select(col("dst").as("id"),
           expr(s"(rank * $dNum) div ($dDen * outdeg)").as("c"))
         .groupBy("id").agg(sum("c").as("s"))
-      ranks = nodes.join(contrib, Seq("id"), "left")
+      nodes.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (when(isSeed, lit(base)).otherwise(lit(0L)) +
             coalesce(col("s"), lit(0L))).as("rank"))
-        .localCheckpoint()
-      i += 1
     }
-    ranks
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM '99) — the directional
@@ -133,42 +121,39 @@ object GraphOps {
     *
     * Scale shape: per round, the edge table shuffles twice keyed by an
     * endpoint carrying only (id, score) longs; the max is a broadcast
-    * one-row frame (never a driver collect); `localCheckpoint` per
-    * round (the [[pageRankFixedPoint]] plan-doubling discipline).
+    * one-row frame (never a driver collect); hubs and authorities are
+    * each cut per round (the [[Iterate]] discipline).
     * Overflow bound: raw sums ≤ nodes·scale and normalization
     * multiplies by `scale` before dividing — keep nodes·scale² < 2⁶³
     * (defaults fine to ~9·10⁶ nodes; drop `scale` beyond). */
   def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && scale > 0,
       s"need iters >= 1 and scale > 0, got iters=$iters scale=$scale")
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
+    val e = Iterate.cut(edges.select(col("src"), col("dst")).distinct())
     require(!e.isEmpty, "HITS needs at least one edge")
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
-    def normalized(raw: DataFrame, out: String): DataFrame = {
+    // `base` (one row per node) gains column `out`: `raw` max-normalized
+    def normalized(base: DataFrame, raw: DataFrame, out: String): DataFrame = {
       val mx = raw.agg(max("raw").as("mx"))
-      nodes.join(raw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("raw"), lit(0L)).as("raw"))
+      base.join(raw, Seq("id"), "left")
+        .withColumn("raw", coalesce(col("raw"), lit(0L)))
         .crossJoin(broadcast(mx))
-        .select(col("id"),
-          expr(s"CAST(raw * $scale div mx AS BIGINT)").as(out))
+        .withColumn(out, expr(s"CAST(raw * $scale div mx AS BIGINT)"))
+        .drop("raw", "mx")
     }
-    var auth = nodes.withColumn("auth", lit(scale)).localCheckpoint()
-    var hub: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      hub = normalized(
-        e.join(auth.withColumnRenamed("id", "dst"), "dst")
+    // each round's state is (id, hub, auth): the hub column rides along
+    // so the last round's hubs need no join at the end
+    Iterate.rounds(nodes.withColumn("auth", lit(scale)), iters) { state =>
+      val hub = Iterate.cut(normalized(state.select("id"),
+        e.join(state.select(col("id").as("dst"), col("auth")), "dst")
           .groupBy(col("src").as("id")).agg(sum("auth").as("raw")),
-        "hub").localCheckpoint()
-      auth = normalized(
+        "hub"))
+      normalized(hub,
         e.join(hub.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id")).agg(sum("hub").as("raw")),
-        "auth").localCheckpoint()
-      i += 1
+        "auth")
     }
-    hub.join(auth, "id")
   }
 
   /** Exact triangle count on an undirected (src, dst) edge table — the
@@ -233,24 +218,6 @@ object GraphOps {
       .agg(count(lit(1)).as("triangles"))
   }
 
-  /** Synchronous label propagation (Raghavan et al. 2007) — the
-    * COMMUNITY member of the graph tier: connected components answer
-    * "reachable at all?", LPA answers "densely knit together?"
-    * (near-dup families inside one giant crawl component, topic groups
-    * in a citation graph). Deterministic by construction — classic LPA
-    * randomizes update order and tie-breaks, which no second engine
-    * could replay: labels init to node ids; each round EVERY node
-    * simultaneously takes the most frequent label among its neighbors
-    * (count desc, then smallest label), isolated nodes keep theirs.
-    *
-    * Scale shape per round: one edge⋈label join keyed by node id, a
-    * (node, label)-keyed count with map-side partial combine, and a
-    * per-node argmax window — edges and labels are two longs wide, so
-    * the shuffles carry ids, never payload; `localCheckpoint` per round
-    * truncates the lineage exactly like the components loop.
-    *
-    * @param edges (src, dst) undirected pair table (dups/direction fine)
-    * @return (id, lbl) after `iters` synchronous rounds */
   /** Item co-occurrence similarity graph (market-basket / item-item
     * collaborative filtering): from (basket, item) observations, for
     * every item the k most-similar other items by co-occurrence
@@ -308,10 +275,9 @@ object GraphOps {
     * posture), an anti-join against existing edges, degrees joined on
     * the pair's endpoints. Exact integers throughout. */
   def linkPrediction(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = Iterate.cut(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct())
     val canon = sym.filter(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
     val deg = sym.groupBy(col("src").as("id"))
@@ -340,10 +306,9 @@ object GraphOps {
     * triangle close is one join against the canonical (a < b) edge
     * set. Nodes with degree < 2 report cc_pm 0 over 0 possible pairs. */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = Iterate.cut(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct())
     val canon = sym.filter(col("src") < col("dst"))
       .select(col("src").as("pa"), col("dst").as("pb"))
     val deg = sym.groupBy(col("src").as("id"))
@@ -373,29 +338,29 @@ object GraphOps {
     *
     * Per round, one join of the current distance table against the
     * edge list and a min-aggregate per node — (id, dist) longs only,
-    * `localCheckpoint`-truncated; at 100 TB this is the textbook
-    * Pregel iteration shape. Returns (id, dist) for REACHED nodes
-    * (unreachable nodes absent, not infinity). */
+    * cut per round; at 100 TB this is the textbook Pregel iteration
+    * shape. Distances only improve and the reached set only grows, so
+    * a round that leaves (count, Σ dist) unchanged changed nothing:
+    * the loop stops there ([[Iterate.fixedPoint]]), before `rounds`
+    * when the graph's diameter is smaller. Returns (id, dist) for
+    * REACHED nodes (unreachable nodes absent, not infinity). */
   def shortestPaths(edges: DataFrame, source: Long,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val sym = edges.select(col("src"), col("dst"), col("w").cast("long"))
+    val sym = Iterate.cut(edges.select(col("src"), col("dst"), col("w").cast("long"))
       .unionByName(edges.select(col("dst").as("src"),
         col("src").as("dst"), col("w").cast("long")))
       .filter(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(min(col("w")).as("w"))
-      .localCheckpoint()
-    var dist = Seq((source, 0L)).toDF("id", "dist").localCheckpoint()
-    for (_ <- 1 to rounds) {
+      .groupBy("src", "dst").agg(min(col("w")).as("w")))
+    Iterate.fixedPoint(Seq((source, 0L)).toDF("id", "dist"), rounds,
+        count(lit(1)), sum("dist")) { dist =>
       val relaxed = dist.join(sym, dist("id") === sym("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy("id").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-    }
-    dist
+    }._1
   }
 
   /** Distributed minimum-spanning-tree via Borůvka rounds — the
@@ -410,61 +375,54 @@ object GraphOps {
     * never the data graph). Component count at least halves per round:
     * ⌈log₂ n⌉ rounds suffice; extra rounds are no-ops.
     *
-    * Scale shape: per round, two label joins + one per-component
-    * bounded selection + a label-dimension components pass, every
-    * frame `localCheckpoint`-truncated; one small driver count per
-    * round decides termination (round-count-bounded, the
-    * [[kCore]]/[[pageRankFixedPoint]] discipline). Returns the MST
-    * edge set (a, b, w) with a < b. Multi-edges collapse to their
-    * minimum weight; self-loops drop. */
+    * Scale shape: the edge list carries its endpoints' component
+    * labels; per round, one per-component bounded selection, a
+    * label-dimension components pass and three joins that mark the
+    * selected edges and relabel the endpoints, cut per round. The cut
+    * observes how many edges still cross components and the loop
+    * stops at zero ([[Iterate.fixedPoint]]), or after `iters` rounds.
+    * Returns the MST edge set (a, b, w) with a < b. Multi-edges
+    * collapse to their minimum weight; self-loops drop. */
   def boruvkaMst(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
-    import spark.implicits._
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"),
         col("w").cast("long").as("w"))
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min(col("w")).as("w"))
-      .localCheckpoint()
-    val nodes = canon.select(col("a").as("id"))
-      .unionByName(canon.select(col("b").as("id"))).distinct()
-    var labels = nodes.withColumn("lbl", col("id")).localCheckpoint()
-    var mst = Seq.empty[(Long, Long, Long)].toDF("a", "b", "w")
-    var done = false
-    var round = 0
-    while (!done && round < iters) {
-      round += 1
-      val tagged = canon
-        .join(labels.select(col("id").as("a"), col("lbl").as("la")), "a")
-        .join(labels.select(col("id").as("b"), col("lbl").as("lb")), "b")
-        .filter(col("la") =!= col("lb"))
-      if (tagged.isEmpty) { done = true }
-      else {
-        val perComp = tagged.select(col("la").as("comp"), col("a"),
-            col("b"), col("w"), col("la"), col("lb"))
-          .unionByName(tagged.select(col("lb").as("comp"), col("a"),
-            col("b"), col("w"), col("la"), col("lb")))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("comp").orderBy(col("w"), col("a"), col("b"))
-        val sel = perComp
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select("a", "b", "w", "la", "lb").distinct()
-          .localCheckpoint()
-        mst = mst.unionByName(sel.select("a", "b", "w")).distinct()
-          .localCheckpoint()
-        val merged = graft.ops.Dedup.connectedComponents(
-          sel.select(col("la").as("id1"), col("lb").as("id2")))
-        labels = labels
-          .join(merged.select(col("id").as("lbl"),
-            col("comp").as("newLbl")), Seq("lbl"), "left")
-          .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl"))
-          .localCheckpoint()
-      }
-    }
-    mst
+    // state: every edge with its endpoints' component labels (la, lb)
+    // and whether it joined the tree; the loop stops once no edge
+    // crosses two components
+    val init = canon.select(col("a"), col("b"), col("w"), col("a").as("la"),
+      col("b").as("lb"), lit(false).as("in_mst"))
+    val (state, _) = Iterate.fixedPoint(init, iters,
+        count(when(col("la") =!= col("lb"), 1)))({ cur =>
+      val tagged = cur.filter(col("la") =!= col("lb"))
+      val perComp = tagged.select(col("la").as("comp"), col("a"),
+          col("b"), col("w"), col("la"), col("lb"))
+        .unionByName(tagged.select(col("lb").as("comp"), col("a"),
+          col("b"), col("w"), col("la"), col("lb")))
+      val cheapest = org.apache.spark.sql.expressions.Window
+        .partitionBy("comp").orderBy(col("w"), col("a"), col("b"))
+      val sel = Iterate.cut(perComp
+        .withColumn("rn", row_number().over(cheapest))
+        .filter(col("rn") === 1)
+        .select("a", "b", "la", "lb").distinct())
+      val merged = graft.ops.Dedup.connectedComponents(
+        sel.select(col("la").as("id1"), col("lb").as("id2")))
+      def relabel(c: String) =
+        merged.select(col("id").as(c), col("comp").as(s"new_$c"))
+      cur.join(sel.select(col("a"), col("b"), lit(true).as("picked")),
+          Seq("a", "b"), "left")
+        .join(relabel("la"), Seq("la"), "left")
+        .join(relabel("lb"), Seq("lb"), "left")
+        .select(col("a"), col("b"), col("w"),
+          coalesce(col("new_la"), col("la")).as("la"),
+          coalesce(col("new_lb"), col("lb")).as("lb"),
+          (col("in_mst") || coalesce(col("picked"), lit(false))).as("in_mst"))
+    }, (_, next) => next.signal == Seq(0L))
+    state.filter(col("in_mst")).select("a", "b", "w")
   }
 
   /** Pairwise association rules (the Apriori/market-basket output
@@ -521,29 +479,30 @@ object GraphOps {
     * under degree k, recompute degrees, repeat. Spam/link-farm curation
     * uses the core number as a density signal next to
     * [[triangleCount]]; a chain or pendant tree unravels one layer per
-    * round, so `iters` must cover the longest peel chain (peeling is
-    * idempotent after convergence — a generous cap is safe, and each
-    * extra round costs one no-op semi-join pass over the converged
-    * edge set).
+    * round, so `iters` must cover the longest peel chain. Peeling only
+    * removes edges, so a round that keeps the live-edge count keeps
+    * the whole edge set and every later round would too: the loop
+    * stops there (progressive core peeling, as in "An Optimal and
+    * Progressive Approach to Online Search of Top-K Influential
+    * Communities", VLDB 2018) and a generous cap costs nothing past
+    * convergence.
     *
     * Scale shape: per round, one degree aggregate + two semi-joins, all
-    * keyed on node ids — no payload, no driver collect; the plan is
-    * truncated per round with `localCheckpoint` (the
-    * [[Dedup.connectedComponents]] discipline). Returns surviving
-    * `(id, deg)` — each member with its within-core degree. */
+    * keyed on node ids — no payload, no driver collect; each round is
+    * cut and its live-edge count observed by the cut ([[Iterate]]).
+    * Returns surviving `(id, deg)` — each member with its within-core
+    * degree. */
   def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1, "kCore needs k >= 1 and iters >= 1")
-    var live = edges.select(col("src"), col("dst"))
+    val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val (live, _) = Iterate.fixedPoint(sym, iters, count(lit(1))) { live =>
       val keep = live.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
-      live = live
+      live
         .join(keep, Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint()
     }
     live.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
   }
@@ -571,8 +530,7 @@ object GraphOps {
     * Scale shape per round: one edge⋈community join, a (node,
     * community) count with map-side combine, one community-dimension
     * degree-mass aggregate, a per-node argmax window — ids and counts
-    * only through every exchange; `localCheckpoint` truncates lineage
-    * like the components loop.
+    * only through every exchange; [[Iterate.rounds]] cuts every round.
     *
     * @param edges (src, dst) undirected pair table (dups/direction ok)
     * @return (id, comm, q_u6) after `iters` synchronous rounds */
@@ -581,7 +539,6 @@ object GraphOps {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
     moveWeightedCore(sym.withColumn("w", lit(1L)), iters)
   }
 
@@ -603,14 +560,13 @@ object GraphOps {
 
   private def moveWeightedCore(adj: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val a = adj.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint()
+    val a = Iterate.cut(
+      adj.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     val nonSelf = a.filter(col("src") =!= col("dst"))
     val deg = a.groupBy(col("src").as("id")).agg(sum("w").as("k"))
     val mRow = a.agg(expr("CAST(sum(w) div 2 AS BIGINT)").as("m"))
-    var comm = deg.select(col("id"), col("id").as("comm"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val comm = Iterate.rounds(deg.select(col("id"), col("id").as("comm")),
+        iters) { comm =>
       val kt = comm.join(deg, "id")
       val kc = kt.groupBy("comm").agg(sum("k").as("kc"))
       val nbrC = nonSelf
@@ -630,10 +586,9 @@ object GraphOps {
         .withColumn("score",
           lit(2L) * col("m") * col("e") - col("k") * col("kcx"))
       val w = Window.partitionBy("id").orderBy(desc("score"), col("ncomm"))
-      comm = cand.withColumn("rn", row_number().over(w))
+      cand.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("id"), col("ncomm").as("comm"))
-        .localCheckpoint()
     }
     val intra = nonSelf
       .join(comm.select(col("id").as("src"), col("comm").as("ca")), "src")
@@ -696,7 +651,7 @@ object GraphOps {
     * joins; everything at level 2 runs on the community-dimension
     * coarse graph. */
   def louvainTwoLevel(edges: DataFrame, iters: Int): DataFrame = {
-    val l1 = modularityLocalMove(edges, iters).localCheckpoint()
+    val l1 = Iterate.cut(modularityLocalMove(edges, iters))
     val comm1 = l1.select("id", "comm")
     val coarse = louvainContract(edges, comm1)
     val l2 = modularityMoveWeighted(coarse, iters)
@@ -727,7 +682,7 @@ object GraphOps {
     * (an entity-resolution candidate cluster, a citation neighborhood
     * — the [[personalizedPageRank]] seed-expansion output), not a raw
     * corpus graph; within that contract every round is two edge joins
-    * and one pair-dimension aggregate, localCheckpoint-pinned.
+    * and one pair-dimension aggregate, cut per round ([[Iterate]]).
     *
     * @return (a, b, sim_ppm) for a < b with sim_ppm > 0 */
   def simRank(edges: DataFrame, iters: Int,
@@ -735,18 +690,19 @@ object GraphOps {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(cPpm > 0 && cPpm < 1000000L,
       s"cPpm must be in (0, 1e6), got $cPpm")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint().toDF("id")
-    val indeg = e.groupBy(col("dst").as("id"))
-      .agg(count(lit(1)).as("ind")).localCheckpoint().toDF("id", "ind")
+    val e = Iterate.cut(edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst")).distinct())
+    val nodes = Iterate.cut(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct()).toDF("id")
+    val indeg = Iterate.cut(e.groupBy(col("dst").as("id"))
+      .agg(count(lit(1)).as("ind"))).toDF("id", "ind")
     val diag = nodes.select(col("id").as("a"), col("id").as("b"),
       lit(1000000L).as("s"))
-    var sim = diag.localCheckpoint().toDF("a", "b", "s")
-    for (_ <- 1 to iters) {
-      val contrib = sim
+    // every round's state is re-aliased through toDF: it shares its
+    // ancestry with `diag`, and fresh expr-ids keep Catalyst from
+    // seeing self-join attribute collisions
+    val sim = Iterate.rounds(diag, iters) { prev =>
+      val contrib = prev.toDF("a", "b", "s")
         .join(e.toDF("i", "ea"), col("i") === col("a"))
         .join(e.toDF("j", "eb"), col("j") === col("b"))
         .filter(col("ea") =!= col("eb"))
@@ -758,21 +714,41 @@ object GraphOps {
           expr(s"CAST($cPpm * ssum div (ia * ib * 1000000) AS BIGINT)")
             .as("s"))
         .filter(col("s") > 0)
-      sim = diag.unionByName(offDiag).localCheckpoint().toDF("a", "b", "s")
-    }
+      diag.unionByName(offDiag)
+    }.toDF("a", "b", "s")
     sim.filter(col("a") < col("b"))
       .select(col("a"), col("b"), col("s").as("sim_ppm"))
   }
 
+  /** Synchronous label propagation (Raghavan et al. 2007) — the
+    * COMMUNITY member of the graph tier: connected components answer
+    * "reachable at all?", LPA answers "densely knit together?"
+    * (near-dup families inside one giant crawl component, topic groups
+    * in a citation graph). Deterministic by construction — classic LPA
+    * randomizes update order and tie-breaks, which no second engine
+    * could replay: labels init to node ids; each round EVERY node
+    * simultaneously takes the most frequent label among its neighbors
+    * (count desc, then smallest label), isolated nodes keep theirs.
+    *
+    * Scale shape per round: one edge⋈label join keyed by node id, a
+    * (node, label)-keyed count with map-side partial combine, and a
+    * per-node argmax window — edges and labels are two longs wide, so
+    * the shuffles carry ids, never payload; each round is cut and
+    * observes how many labels changed, and a round that changes none
+    * is a fixed point, so the loop stops there ([[Iterate.fixedPoint]])
+    * with the rows `iters` rounds would give.
+    *
+    * @param edges (src, dst) undirected pair table (dups/direction fine)
+    * @return (id, lbl) after `iters` synchronous rounds */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = Iterate.cut(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct())
     val nodes = sym.select(col("src").as("id")).distinct()
-    var labels = nodes.withColumn("lbl", col("id")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    val init = nodes.select(col("id"), col("id").as("lbl"), col("id").as("prev"))
+    val (labels, _) = Iterate.fixedPoint(init, iters,
+        count(when(col("lbl") =!= col("prev"), 1)))({ labels =>
       val counts = sym
         .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
         .groupBy(col("src").as("id"), col("lbl"))
@@ -780,12 +756,11 @@ object GraphOps {
       val w = Window.partitionBy("id").orderBy(desc("c"), col("lbl"))
       val winner = counts.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).select("id", "lbl")
-      labels = nodes
+      nodes
         .join(winner, Seq("id"), "left")
-        .join(labels.withColumnRenamed("lbl", "prev"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("lbl"), col("prev")).as("lbl"))
-        .localCheckpoint()
-    }
-    labels
+        .join(labels.select(col("id"), col("lbl").as("prev")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("lbl"), col("prev")).as("lbl"), col("prev"))
+    }, (_, next) => next.signal == Seq(0L))
+    labels.select("id", "lbl")
   }
 }

@@ -32,12 +32,16 @@ object Matching {
     * them from md5 for engine portability — the cmBucket discipline);
     * nothing here computes floats.
     *
-    * Scale shape per round: one anti-join (free proposers), one
-    * (p, rank)-keyed pointer lookup, one per-acceptor argmax window
-    * (offer-dimension partitions), one pointer increment join — every
-    * table is preference-list-sized, localCheckpoint-pinned like the
-    * components loop. Proposers whose list is exhausted simply stop
-    * proposing (their pointer walks off the end).
+    * Scale shape per round: the state is one row per proposer —
+    * (p, ptr, a), a null while free; one (p, rank)-keyed pointer lookup
+    * for the free, one per-acceptor argmax window (offer-dimension
+    * partitions), two joins that advance rejected pointers and record
+    * the held offers — every table is preference-list-sized and cut
+    * per round ([[Iterate.fixedPoint]]). Proposers whose list is
+    * exhausted simply stop proposing (their pointer walks off the
+    * end). A round's cut observes (Σ ptr, #engaged): each rejection
+    * advances a pointer and each accepted proposal adds an engagement,
+    * so both unchanged means nobody proposed — the fixpoint.
     *
     * @param propPrefs (p, a, rank) — proposer p's 0-based preference
     *                  rank of acceptor a (0 = most preferred); one row
@@ -60,57 +64,46 @@ object Matching {
       maxRounds: Int = -1): DataFrame = {
     require(maxRounds >= 1 || maxRounds == -1,
       s"maxRounds must be >= 1 (or -1 = derive from input), got $maxRounds")
-    val pp = propPrefs.select(col("p").cast("long").as("p"),
-      col("a").cast("long").as("a"), col("rank").cast("long").as("rank"))
-      .localCheckpoint()
+    val pp = Iterate.cut(propPrefs.select(col("p").cast("long").as("p"),
+      col("a").cast("long").as("a"), col("rank").cast("long").as("rank")))
     // the derived bound is one bounded count over the (input-sized)
     // preference table — the IVF probe-ranking cost class, not a
     // corpus-sized collect
     val roundCap: Long =
       if (maxRounds >= 1) maxRounds.toLong else pp.count() + 1L
-    val pa = accScores.select(col("a").cast("long").as("a"),
+    val pa = Iterate.cut(accScores.select(col("a").cast("long").as("a"),
       col("p").cast("long").as("p"),
-      col("score").cast("long").as("score")).localCheckpoint()
-    val spark = propPrefs.sparkSession
-    var ptr = pp.select("p").distinct()
-      .withColumn("ptr", lit(0L)).localCheckpoint().toDF("p", "ptr")
-    var eng = spark.createDataFrame(Seq.empty[(Long, Long)])
-      .toDF("p", "a")
-    var round = 0L
-    var done = false
-    // every per-round table is localCheckpoint-pinned AND re-aliased
-    // through toDF: the loop joins each round's output against tables
-    // sharing the same ancestry (pp/pa), and without fresh expr-ids
-    // Catalyst sees self-join attribute collisions
-    while (!done && round < roundCap) {
-      val props = ptr.join(eng.select("p"), Seq("p"), "left_anti")
+      col("score").cast("long").as("score")))
+    val init = pp.select("p").distinct()
+      .select(col("p"), lit(0L).as("ptr"), lit(null).cast("long").as("a"))
+    // every per-round table is cut AND re-aliased through toDF: the
+    // loop joins each round's output against tables sharing the same
+    // ancestry (pp/pa), and without fresh expr-ids Catalyst sees
+    // self-join attribute collisions
+    val (state, converged) = Iterate.fixedPoint(init, roundCap,
+        sum("ptr"), count(col("a"))) { cut =>
+      val st = cut.toDF("p", "ptr", "a")
+      val props = st.filter(col("a").isNull)
         .join(pp.toDF("pp_p", "pp_a", "pp_rank"),
           col("p") === col("pp_p") && col("ptr") === col("pp_rank"))
         .select(col("p"), col("pp_a").as("a"))
-        .localCheckpoint().toDF("p", "a")
-      if (props.isEmpty) done = true
-      else {
-        val cands = props.unionByName(eng).localCheckpoint()
-          .toDF("p", "a")
-        val w = Window.partitionBy("a")
-          .orderBy(desc("score"), col("p"))
-        val winners = cands.join(pa, Seq("a", "p"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).select("p", "a")
-          .localCheckpoint().toDF("p", "a")
-        val losers = cands.exceptAll(winners)
-          .select("p").distinct()
-          .withColumn("__lost", lit(1L))
-        ptr = ptr.join(losers, Seq("p"), "left")
-          .select(col("p"),
-            (col("ptr") + coalesce(col("__lost"), lit(0L))).as("ptr"))
-          .localCheckpoint().toDF("p", "ptr")
-        eng = winners
-        round += 1
-      }
+      val cands = Iterate.cut(props.unionByName(
+        st.filter(col("a").isNotNull).select("p", "a"))).toDF("p", "a")
+      val w = Window.partitionBy("a")
+        .orderBy(desc("score"), col("p"))
+      val winners = Iterate.cut(cands.join(pa, Seq("a", "p"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).select("p", "a")).toDF("p", "a")
+      val losers = cands.exceptAll(winners)
+        .select("p").distinct()
+        .withColumn("__lost", lit(1L))
+      st.select("p", "ptr").join(losers, Seq("p"), "left")
+        .join(winners, Seq("p"), "left")
+        .select(col("p"),
+          (col("ptr") + coalesce(col("__lost"), lit(0L))).as("ptr"), col("a"))
     }
-    require(done, s"stableMatching did not converge in $roundCap rounds")
-    eng.join(pp.toDF("p", "a", "rank"), Seq("p", "a"))
+    require(converged, s"stableMatching did not converge in $roundCap rounds")
+    state.toDF("p", "ptr", "a").join(pp.toDF("p", "a", "rank"), Seq("p", "a"))
       .select(col("p"), col("a"), col("rank").as("rank_used"))
   }
 }

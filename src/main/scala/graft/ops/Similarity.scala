@@ -2263,9 +2263,9 @@ object Similarity {
     * truncating div, which for negative coords would widen the origin
     * cell — hence the guard, enforced lazily in the plan).
     *
-    * Components run through [[Dedup.connectedComponents]] (min-label,
-    * localCheckpoint-pinned rounds); a core with no core neighbor
-    * forms its own singleton cluster.
+    * Components run through [[Dedup.connectedComponents]] (O(log n)
+    * large-star/small-star rounds, so long density chains stay cheap);
+    * a core with no core neighbor forms its own singleton cluster.
     *
     * @return (id, role ∈ core|border|noise, cluster — null for noise)
     */
@@ -2307,11 +2307,10 @@ object Similarity {
       .join(cores.withColumnRenamed("id", "id2"), "id2")
       .filter(col("id1") < col("id2"))
       .select("id1", "id2")
-    // LogN (large-star/small-star), not plain min-label: an eps-graph
-    // at percolation density forms long chains, and plain propagation
-    // pays one round per hop of diameter (observed: minutes at sf0.01
-    // on the q319 fixture where LogN converges in ~10 rounds).
-    val comps = Dedup.connectedComponentsLogN(coreEdges)
+    // an eps-graph at percolation density forms long chains; label
+    // propagation pays one round per hop of diameter (observed: minutes
+    // at sf0.01 on the q319 fixture), the star rounds ~10 in total
+    val comps = Dedup.connectedComponents(coreEdges)
     val coreCluster = cores.join(comps, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("cluster"))
     val borderCluster = nbrs
